@@ -16,6 +16,7 @@ memory, and Spark's InMemoryFileIndex on the handle keeps the file listing.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -92,42 +93,46 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Persisted-DataFrame memos (capped interactions, graph edge tables, rollup
-# tiers, minhash signatures) previously grew without bound: a long-lived
-# session touching many sf_dirs accumulated pinned storage with no unpersist
-# point (r5 ADVICE). memo_persist centralizes the lifecycle: LRU-capped at
-# MEMO_CAP entries per memo dict, evictees unpersist (non-blocking — an
-# in-flight job holding the evicted handle still computes, just uncached).
-# 4 covers the realistic working set (the three test SFs + one ad-hoc dir).
-MEMO_CAP = 4
+# (applicationId, sf_dir, name, args) -> persisted DataFrame, in LRU order.
+_MEMO: dict[tuple, DataFrame] = {}
+# Room for every memoized name of one sf_dir, with some to spare.
+MEMO_CAP = 16
 
 
-def memo_persist(
-    memo: dict, key: tuple, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Return memo[key], (re)persisted; build+persist+insert on miss.
+def memo(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Decorator: the session memo for shared persisted building blocks.
 
-    Re-persist on hit covers an external ``spark.catalog.clearCache()``
-    having dropped the entry — the multi-branch fan-outs these memos feed
-    must compute their building block once per action, not per branch.
+    ``fn(spark, sf_dir, *args)`` runs once per key
+    ``(applicationId, sf_dir, name, args)``; its frame is ``persist()``ed and
+    every later call returns the same handle. applicationId is unique per
+    SparkSession, so an entry never leaks into a successor session. One LRU
+    bound, ``MEMO_CAP`` entries, covers all names together; the entry pushed
+    out is unpersisted without blocking (a job still holding it computes
+    uncached). Entries hold only persisted frames, never checkpoints, so
+    ``spark.catalog.clearCache()`` is the complete reset: a hit on a cleared
+    entry persists it again, and the next action recomputes it once for all
+    the branches that share it.
     """
-    cached = memo.get(key)
-    if cached is not None:
-        lvl = cached.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            cached.persist()
-        memo.pop(key)
-        memo[key] = cached  # refresh LRU position (dicts keep insert order)
-        return cached
-    df = build().persist()
-    memo[key] = df
-    while len(memo) > MEMO_CAP:
-        evicted = memo.pop(next(iter(memo)))
-        try:
-            evicted.unpersist(blocking=False)
-        except Exception:
-            pass  # a stopped session's handle: nothing left to unpin
-    return df
+    name = f"{fn.__module__}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
+        key = (spark.sparkContext.applicationId, sf_dir, name, args)
+        df = _MEMO.pop(key, None)
+        if df is None:
+            df = fn(spark, sf_dir, *args).persist()
+        elif not (df.storageLevel.useMemory or df.storageLevel.useDisk):
+            df.persist()
+        _MEMO[key] = df  # (re)insert as most recent
+        while len(_MEMO) > MEMO_CAP:
+            evicted = _MEMO.pop(next(iter(_MEMO)))
+            try:
+                evicted.unpersist(blocking=False)
+            except Exception:
+                pass  # a stopped session's handle: nothing left to unpin
+        return df
+
+    return wrapper
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import memo, table
 from recsys_spark_spark.cf import itemcf
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
@@ -46,6 +46,7 @@ SELECT
 FROM hits"""
 
 
+@memo
 def _train_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same single-exchange user_id partitioning discipline as
     # itemcf.interactions(): the whole downstream CF chain (self-join, score
@@ -64,27 +65,9 @@ def _train_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memoized persisted (train matrix, recommendations) per (session, sf_dir) —
-# same rationale and clearCache-recovery discipline as itemcf._CAPPED.
-_TRAIN: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _train_and_recs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pair = _TRAIN.get(key)
-    if pair is None:
-        ui = _train_interactions(spark, sf_dir).persist()
-        neighbors = itemcf.topk_neighbors_fused(ui, itemcf.item_norms(ui)).select(
-            "item_i", "item_j", "sim"
-        )
-        pair = (ui, itemcf.recommend(ui, neighbors).persist())
-        _TRAIN[key] = pair
-    else:
-        for df in pair:
-            lvl = df.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                df.persist()
-    return pair
+@memo
+def _train_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return itemcf.flagship_chain(_train_interactions(spark, sf_dir))
 
 
 @query("q_eval_metrics", oracle=_EVAL_SQL)
@@ -92,7 +75,7 @@ def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: the train matrix feeds neighbors, scoring, the seen-filter,
     # and the coverage denominator. Fused neighbor path = one exchange,
     # identical output to cooccurrence→symmetrize→topk (itemcf docstring).
-    ui, recs = _train_and_recs(spark, sf_dir)
+    ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
 
     o = table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
@@ -198,7 +181,7 @@ def q_eval_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    ui, recs = _train_and_recs(spark, sf_dir)
+    ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
 
     o = table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
@@ -296,7 +279,7 @@ def q_eval_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HashPartitioning(user_id) the recommend() output already carries;
     the reciprocal rank is integer-nano-rounded per user so the final
     averages are insertion-order independent."""
-    ui, recs = _train_and_recs(spark, sf_dir)
+    ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
 
     o = table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
@@ -367,8 +350,8 @@ def q_eval_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond-accuracy metric set next to q_eval_metrics' coverage.
 
     Shape: the engine side consumes the flagship builder chain via the
-    session-memoized flagship_recs frame (its persisted interaction matrix
-    AND the derived recommendation frame are reused, not recomputed); the item
+    memoized flagship_recs frame (its persisted interaction matrix AND the
+    derived recommendation frame are reused, not recomputed); the item
     novelty table is item-catalog-sized and BROADCASTS onto the
     recommendation stream; one user-keyed aggregate closes. The oracle
     SPLICES the registered flagship oracle verbatim (guarded — the
@@ -376,8 +359,6 @@ def q_eval_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     nano-rounded to an INTEGER once, so per-user sums are exact."""
     from recsys_spark_spark.cf.itemcf import flagship_recs
 
-    # r9: consume the session-memoized flagship frame (same builder chain as
-    # q_cf_recommend — one shared build per session across novelty/hybrid).
     recs = flagship_recs(spark, sf_dir).select("user_id", "item_id")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo_persist, spread, table
+from recsys_spark_spark.catalog import memo, spread, table
 from recsys_spark_spark.functions.determinism import dround, oround, rlong
 from recsys_spark_spark.registry import query
 
@@ -87,17 +87,11 @@ def interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, cap) -> persisted capped interaction matrix.
-# Memoized so the CF queries that share it within one session (ItemCF/UserCF
-# recommend, eval) reuse ONE cache entry instead of each persist()ing an
-# identical copy — a 95-query sweep otherwise accumulates duplicate cached
-# matrices in the shared driver JVM with no unpersist point.
-_CAPPED: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def capped_interactions(spark: SparkSession, sf_dir: str, cap: int = MAX_USER_HISTORY) -> DataFrame:
-    """Interaction matrix with per-user history capped to the `cap` strongest
-    items (deterministic tie-break on item_id). Skew guard for co-occurrence.
+@memo
+def capped_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interaction matrix with per-user history capped to the
+    MAX_USER_HISTORY strongest items (deterministic tie-break on item_id).
+    Skew guard for co-occurrence.
 
     Because interactions() is already hash-partitioned by user_id, the cap is
     a partition-local window row_number — no exchange, and the Tungsten sort
@@ -105,47 +99,31 @@ def capped_interactions(spark: SparkSession, sf_dir: str, cap: int = MAX_USER_HI
     persisted (callers fan out into 4+ branches) and keeps
     HashPartitioning(user_id), which the whole downstream CF chain relies on.
     """
-    def build() -> DataFrame:
-        ui = interactions(spark, sf_dir)
-        w = Window.partitionBy("user_id").orderBy(F.col("cnt").desc(), F.col("item_id"))
-        return (
-            ui.withColumn("_hrank", F.row_number().over(w))
-            .where(F.col("_hrank") <= cap)
-            .drop("_hrank")
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, cap)
-    return memo_persist(_CAPPED, key, build)
+    ui = interactions(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy(F.col("cnt").desc(), F.col("item_id"))
+    return (
+        ui.withColumn("_hrank", F.row_number().over(w))
+        .where(F.col("_hrank") <= MAX_USER_HISTORY)
+        .drop("_hrank")
+    )
 
 
-# (applicationId, sf_dir) -> persisted flagship recommendation frame
-# (r9, VERDICT r8 #7 "eval-family session economics"): the flagship's
-# DOWNSTREAM consumers — q_eval_novelty and q_cf_hybrid_rec's warm branch —
-# each re-derived neighbors+recommend from the persisted matrix per call
-# (~4-6 s of repeated chain CPU per query at sf0.1, ~60-130 s at sf1). One
-# memoized build per session serves them all; same within-session-only
-# discipline as _CAPPED (keyed on applicationId, dies with the process;
-# bench.py's clearCache before every timed sample forces a full recompute
-# inside the timed action, so nothing is amortized across bench runs).
-# q_cf_recommend itself deliberately does NOT consume the memo: its
-# two-exchange plan is digest-pinned (tests/test_plans.py) and it is the
-# driver's headline query — its declared plan stays byte-identical.
-_RECS: dict[tuple[str, str], DataFrame] = {}
+def flagship_chain(ui: DataFrame) -> DataFrame:
+    """The ItemCF recommendation chain over an interaction matrix: fused
+    top-K neighbors, then top-N scoring with the seen-filter. The flagship
+    (q_cf_recommend), its memoized frame (flagship_recs) and the holdout
+    evaluation all run this one chain. q_cf_recommend builds it afresh
+    rather than reading flagship_recs, so its pinned plan
+    (tests/test_plans.py) stays the chain's own."""
+    neighbors = topk_neighbors_fused(ui, item_norms(ui)).select("item_i", "item_j", "sim")
+    return recommend(ui, neighbors)
 
 
+@memo
 def flagship_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship top-5 recommendation frame, memo-persisted per session
-    for its downstream consumers (novelty, hybrid). Same rows as
-    q_cf_recommend by construction — it IS the same builder chain."""
-    def build() -> DataFrame:
-        ui = capped_interactions(spark, sf_dir)
-        neighbors = topk_neighbors_fused(ui, item_norms(ui)).select(
-            "item_i", "item_j", "sim"
-        )
-        return recommend(ui, neighbors)
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_RECS, key, build)
+    """The flagship top-5 recommendation frame, persisted for its downstream
+    consumers (novelty, hybrid): the same rows as q_cf_recommend."""
+    return flagship_chain(capped_interactions(spark, sf_dir))
 
 
 def audience_capped(ui: DataFrame, cap: int = MAX_ITEM_AUDIENCE) -> DataFrame:
@@ -577,9 +555,7 @@ def q_cf_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     base join+agg runs once per action instead of four times — the single
     biggest win at every scale (at 100 TB: MEMORY_AND_DISK or a parquet
     checkpoint)."""
-    ui = capped_interactions(spark, sf_dir)
-    neighbors = topk_neighbors_fused(ui, item_norms(ui)).select("item_i", "item_j", "sim")
-    return recommend(ui, neighbors)
+    return flagship_chain(capped_interactions(spark, sf_dir))
 
 
 def topk_user_neighbors(ui: DataFrame, k: int = TOP_K_NEIGHBORS) -> DataFrame:
@@ -863,33 +839,25 @@ def popularity_recs(ui: DataFrame, users: DataFrame, n: int = TOP_N_RECS) -> Dat
 
 COOC_CUTOFF = "1997-01-01"
 
-# (applicationId, sf_dir) -> persisted first-seen edge table; same lifecycle
-# pattern as analytics._PR_EDGES — the 4 pair terms below each reference it,
-# and without a persist the orders-lineitem aggregate would re-execute per
-# term (observed by the round-4 review; exchange reuse does not cover the
-# differently-filtered old/new subtrees).
-_FIRST_SEEN: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-        l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        return (
-            o.join(l, o.o_orderkey == l.l_orderkey)
-            .groupBy(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-            .agg(F.min("o_orderdate").alias("m"))
-        )
+    """(u, i, m): first order date per user-item edge. Persisted: its
+    consumers reference it from several differently-filtered subtrees,
+    which exchange reuse does not cover."""
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .groupBy(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
+        .agg(F.min("o_orderdate").alias("m"))
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_FIRST_SEEN, key, build)
 
-
-# (applicationId, sf_dir, cap) -> persisted history-capped edge table. The
-# pair self-join references the capped edges on BOTH sides; without a persist
-# the cap window (exchange + sort) executes once per side over the cached
-# first_seen — measured ~2x the cap's cost at sf0.1 for zero benefit.
-_CAPPED_EDGES: dict[tuple[str, str, int], DataFrame] = {}
+@memo
+def _capped_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """history_capped_edges over _first_seen, persisted: the pair self-join
+    reads it on both sides, and each side would rerun the cap window."""
+    return history_capped_edges(_first_seen(spark, sf_dir))
 
 
 def history_capped_edges(first_seen: DataFrame, cap: int = MAX_USER_HISTORY) -> DataFrame:
@@ -966,11 +934,7 @@ def q_cf_incremental_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic). One join + one aggregate is ~4x less shuffle I/O and
     removes the concurrent-hash-map pressure of the 3-way union's merge.
     All joins are user-keyed on one partitioning; counts are exact ints."""
-    key = (spark.sparkContext.applicationId, sf_dir, MAX_USER_HISTORY)
-    first_seen = memo_persist(
-        _CAPPED_EDGES, key, lambda: history_capped_edges(_first_seen(spark, sf_dir))
-    )
-    edges = first_seen.select(
+    edges = _capped_first_seen(spark, sf_dir).select(
         "u", "i", (F.col("m") >= F.lit(COOC_CUTOFF)).alias("is_new")
     )
     a = edges.select("u", F.col("i").alias("pi"), F.col("is_new").alias("a_new"))
@@ -1253,9 +1217,6 @@ def q_cf_hybrid_rec(spark: SparkSession, sf_dir: str) -> DataFrame:
     ui = capped_interactions(spark, sf_dir)
     hist = ui.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_items"))
     cold = hist.where(F.col("n_items") < WARM_MIN_ITEMS).select("user_id")
-    # r9: the warm branch consumes the session-memoized flagship frame
-    # (flagship_recs) instead of re-deriving neighbors+recommend — same
-    # builder chain, built once per session across novelty/hybrid.
     warm = (
         flagship_recs(spark, sf_dir)
         .join(cold.hint("shuffle_hash"), "user_id", "left_anti")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo_persist, spread, table
+from recsys_spark_spark.catalog import memo, spread, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.llm.similarity import _scaled_dot
 from recsys_spark_spark.registry import query
@@ -838,9 +838,6 @@ def _near_dup_edges(spark: SparkSession, d: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> converged cluster-label DataFrame (localCheckpointed)
-_CC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 _CLUSTER_EDGES_CTE = """tok AS (
   SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ), sizes AS (
@@ -902,11 +899,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     small by construction (the cap is component size, not corpus size), so
     the closure stays bounded.
 
-    The converged label frame is memoized per (session, sf_dir): the corpus
-    pipeline (q_pipeline_corpus) consumes it in the same session, and the
-    fixpoint is already materialized via localCheckpoint, so re-running the
-    loop would only repeat work.
-
     Duplicate-mass cap (round-7; sf1 probe measured 26.5× for 10× data as
     exact copies densified the length buckets — c copies in a bucket cost
     c²/2 candidate pairs and a clique of propagation edges). The edge
@@ -919,10 +911,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     also unchanged: a doc had degree ≥ 1 iff it has a copy (m ≥ 2 group) or
     its representative has a near-dup edge. Edge count drops from
     O(copies²) to O(members + rep pairs)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _CC_MEMO.get(key)
-    if memo is not None:
-        return memo
     docs, groups = _exact_dup_groups(table(spark, sf_dir, "documents"))
     rep_edges = _near_dup_edges(spark, groups).select("d1", "d2")
     rep_of = groups.select("h", "lang", "n_chars", F.col("doc_id").alias("rep"))
@@ -931,9 +919,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") != F.col("rep"))
         .select(F.col("rep").alias("d1"), F.col("doc_id").alias("d2"))
     )
-    out = connected_components(rep_edges.unionAll(star))
-    _CC_MEMO[key] = out
-    return out
+    return connected_components(rep_edges.unionAll(star))
 
 
 def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
@@ -1082,30 +1068,20 @@ FROM sig s JOIN shared sh2 ON sh2.d1 = s.d1 AND sh2.d2 = s.d2
 """
 
 
-# (applicationId, sf_dir) -> persisted minhash signature table. Signatures
-# are consumed by three downstream branches (banding + both sides of the
-# per-pair agreement join); without materialization each branch replays the
-# whole shingle→md5→16-lane-min chain (observed: 6 duplicated lane joins in
-# the physical plan). A production pipeline writes signatures to storage for
-# the same reason; here they persist per session like itemcf._CAPPED.
-_MH_SIGS: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, mh): the 16-lane MinHash signature table, persisted.
 
-    Shingling is row-local; the 16 hash lanes fan out via a broadcast of a
-    16-row range (the only nested-loop join in the chain — over 16 rows);
-    the signature build is one shuffle keyed by doc_id."""
-    def build() -> DataFrame:
-        # r8: spread the single-row-group corpus scan — shingling + md5 +
-        # the 16-lane fan-out otherwise run single-core on the scan's one
-        # task (4.3 s 1-task stage at sf0.1; identity on a real multi-file
-        # table). Same fix as the committed containment/bpe spread family.
-        return _mh_signature_frame(spark, spread(spark, table(spark, sf_dir, "documents")))
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_MH_SIGS, key, build)
+    Signatures feed three branches (banding + both sides of the per-pair
+    agreement join); without the persist each branch replays the whole
+    shingle→md5→16-lane-min chain. Shingling is row-local; the 16 hash
+    lanes fan out via a broadcast of a 16-row range (the only nested-loop
+    join in the chain — over 16 rows); the signature build is one shuffle
+    keyed by doc_id."""
+    # spread the single-row-group corpus scan — shingling + md5 + the
+    # 16-lane fan-out otherwise run single-core on the scan's one task
+    # (4.3 s 1-task stage at sf0.1; identity on a real multi-file table).
+    return _mh_signature_frame(spark, spread(spark, table(spark, sf_dir, "documents")))
 
 
 def _mh_signature_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:

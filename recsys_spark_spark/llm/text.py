@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo_persist, spread, table
+from recsys_spark_spark.catalog import memo, spread, table
 from recsys_spark_spark.registry import query
 from recsys_spark_spark.functions.determinism import dround, rlong
 
@@ -1157,9 +1157,6 @@ ORDER BY step
 """
 
 
-_BPE_WORDS: dict[tuple[str, str], DataFrame] = {}
-
-
 @query("q_text_bpe_train", oracle=_bpe_oracle(BPE_MERGES))
 def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M200: byte-pair-encoding merge training (Sennrich et al. 2016,
@@ -1199,31 +1196,27 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@memo
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memo-persisted corpus word-frequency dictionary (the one
-    corpus-sized reduction every BPE query starts from). The memo (keyed
-    per app+sf, LRU-evicted) matters because the K chained merge stages
-    and their K union heads re-derive from this tiny dict, not the
-    corpus — without the persist, each head would rescan documents
-    (K scans of 100 TB instead of one)."""
-
-    def build() -> DataFrame:
-        # spread the single-split corpus scan: the regexp tokenize + explode
-        # otherwise runs the whole corpus on one task (an 85 s cold 1-task
-        # stage at sf0.1 — plans/r08/q_text_bpe_train_*). Identity at
-        # cluster scale (see catalog.spread).
-        d = spread(spark, table(spark, sf_dir, "documents"))
-        return (
-            d.select(
-                F.explode(
-                    F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
-                ).alias("w")
-            )
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("freq"))
+    """Persisted corpus word-frequency dictionary (the one corpus-sized
+    reduction every BPE query starts from). The persist matters because
+    the K chained merge stages and their K union heads re-derive from this
+    tiny dict, not the corpus — without it, each head would rescan
+    documents (K scans of 100 TB instead of one)."""
+    # spread the single-split corpus scan: the regexp tokenize + explode
+    # otherwise runs the whole corpus on one task (an 85 s cold 1-task
+    # stage at sf0.1 — plans/r08/q_text_bpe_train_*). Identity at
+    # cluster scale (see catalog.spread).
+    d = spread(spark, table(spark, sf_dir, "documents"))
+    return (
+        d.select(
+            F.explode(
+                F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+            ).alias("w")
         )
-
-    return memo_persist(_BPE_WORDS, (spark.sparkContext.applicationId, sf_dir), build)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
 
 
 def _bpe_seq0():

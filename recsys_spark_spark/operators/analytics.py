@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo_persist, table
+from recsys_spark_spark.catalog import memo, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
 
@@ -396,35 +396,26 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> persisted edge list; same memo-persist pattern
-# (and clearCache recovery) as itemcf._CAPPED — the edge list feeds deg, the
-# deg.count() action, and all PR_ITERATIONS contribution joins.
-_PR_EDGES: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        # Build from the CAPPED interaction matrix (itemcf.MAX_USER_HISTORY):
-        # a hot user contributes O(history²) pairs to the self-join, so the
-        # uncapped matrix is the 100×-scale blow-up the flagship already
-        # guards against. At every test SF no user exceeds the cap
-        # (pytest-pinned in tests/test_plans.py), so capped ≡ uncapped and
-        # the UNCAPPED SQL oracle stays exact. Bonus: the persisted matrix
-        # is shared with the whole CF family instead of re-scanning
-        # orders⋈lineitem here.
-        from recsys_spark_spark.cf.itemcf import capped_interactions
+    """Distinct directed co-purchase edges (src, dst), persisted: they feed
+    deg, the deg.count() action and every PageRank contribution join."""
+    # Build from the CAPPED interaction matrix (itemcf.MAX_USER_HISTORY):
+    # a hot user contributes O(history²) pairs to the self-join, so the
+    # uncapped matrix is the 100×-scale blow-up the flagship already
+    # guards against. At every test SF no user exceeds the cap
+    # (pytest-pinned in tests/test_plans.py), so capped ≡ uncapped and
+    # the UNCAPPED SQL oracle stays exact. Bonus: the persisted matrix
+    # is shared with the whole CF family instead of re-scanning
+    # orders⋈lineitem here.
+    from recsys_spark_spark.cf.itemcf import capped_interactions
 
-        ui = capped_interactions(spark, sf_dir).select(
-            F.col("user_id").alias("u"), F.col("item_id").alias("i")
-        )
-        a = ui.select("u", F.col("i").alias("src"))
-        b = ui.select("u", F.col("i").alias("dst"))
-        return (
-            a.join(b, "u").where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_PR_EDGES, key, build)
+    ui = capped_interactions(spark, sf_dir).select(
+        F.col("user_id").alias("u"), F.col("item_id").alias("i")
+    )
+    a = ui.select("u", F.col("i").alias("src"))
+    b = ui.select("u", F.col("i").alias("dst"))
+    return a.join(b, "u").where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
 
 
 # --------------------------------------------------------------------------
@@ -879,10 +870,9 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 optimization (guide §2.4/§5): triangle_counts references the edge
     # list THREE times (e1/e2/e3), and each lazy reference re-derived the
     # 13.1M-row co-occurrence pair shuffle. thresholded_edges() is the
-    # identical rule (this query's own contract), localCheckpointed and
-    # memoized per (session, sf_dir) — the pair join now runs once and the
-    # three join sides scan the checkpointed rows. (a, b) is canonical
-    # a > b, i.e. (y, x) here.
+    # identical rule (this query's own contract), localCheckpointed — the
+    # pair join now runs once and the three join sides scan the checkpointed
+    # rows. (a, b) is canonical a > b, i.e. (y, x) here.
     e = thresholded_edges(spark, sf_dir).select(
         F.col("b").alias("x"), F.col("a").alias("y")
     )
@@ -1085,9 +1075,8 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle — measured as six identical 116.6 MB / 13,127,405-row
     # exchanges, 1,347 s CPU for the query at sf0.1. thresholded_edges()
     # is the SAME rule (capped matrix + population-scaled floor, the
-    # q_graph_triangles contract), localCheckpointed and memoized per
-    # (session, sf_dir), so the pair join now runs once. (a, b) is
-    # canonical a > b, i.e. (y, x) here.
+    # q_graph_triangles contract), localCheckpointed, so the pair join now
+    # runs once. (a, b) is canonical a > b, i.e. (y, x) here.
     e = thresholded_edges(spark, sf_dir).select(
         F.col("b").alias("x"), F.col("a").alias("y")
     )
@@ -1736,34 +1725,27 @@ EIG_ITERS = 3
 EIG_SCALE = 1e6  # per-iteration integer quantization of the unit vector
 EIG_TOP = 20
 
-# (applicationId, sf_dir) -> persisted WEIGHTED co-occurrence edges
-# (src, dst, c) — same lifecycle pattern as _PR_EDGES; PageRank's edge
-# table is the UNWEIGHTED distinct-pair projection of this one, kept
-# separate because its iteration divides by outdegree, not weight.
-_EIG_EDGES: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _eig_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        # Capped matrix for the same reasons as _pr_edges (cap ≡ uncapped at
-        # test SFs, pytest-pinned; bounds the O(history²) pair blow-up and
-        # shares the persisted CF matrix instead of a second scan+join).
-        from recsys_spark_spark.cf.itemcf import capped_interactions
+    """WEIGHTED co-occurrence edges (src, dst, c). PageRank's edge table is
+    the unweighted distinct-pair projection of this one, kept separate
+    because its iteration divides by outdegree, not weight."""
+    # Capped matrix for the same reasons as _pr_edges (cap ≡ uncapped at
+    # test SFs, pytest-pinned; bounds the O(history²) pair blow-up and
+    # shares the persisted CF matrix instead of a second scan+join).
+    from recsys_spark_spark.cf.itemcf import capped_interactions
 
-        ui = capped_interactions(spark, sf_dir).select(
-            F.col("user_id").alias("u"), F.col("item_id").alias("i")
-        )
-        a = ui.select("u", F.col("i").alias("src"))
-        b = ui.select("u", F.col("i").alias("dst"))
-        return (
-            a.join(b, "u")
-            .where(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_EIG_EDGES, key, build)
+    ui = capped_interactions(spark, sf_dir).select(
+        F.col("user_id").alias("u"), F.col("item_id").alias("i")
+    )
+    a = ui.select("u", F.col("i").alias("src"))
+    b = ui.select("u", F.col("i").alias("dst"))
+    return (
+        a.join(b, "u")
+        .where(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
 
 
 def _eig_oracle() -> str:
@@ -1824,7 +1806,7 @@ def q_graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     same {EIG_ITERS} iterations as chained CTEs.
 
     Scale shape: weighted edges build once from the user-keyed self-join
-    (persisted, module-memoized like PageRank's); each iteration is one
+    (persisted and memoized like PageRank's); each iteration is one
     dst-keyed join + src-keyed aggregate riding the edge partitioning,
     plus a 1-row broadcast norm. Output is top-{EIG_TOP} via a
     rank-limited window."""
@@ -2328,18 +2310,12 @@ def star_contract(e: DataFrame, rounds: int) -> DataFrame:
     return e
 
 
-# (applicationId, sf_dir) -> localCheckpointed canonical (a > b) edge list of
-# the thresholded co-purchase graph — the triangle rule (capped matrix +
-# population-scaled floor). Checkpointed, not persisted: it feeds ~12 lazy
-# refs per star round / per BFS hop, so lineage truncation is the point.
-_THR_EDGES: dict[tuple[str, str], DataFrame] = {}
-
-
 def thresholded_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _THR_EDGES.get(key)
-    if cached is not None:
-        return cached
+    """Canonical (a > b) edge list of the thresholded co-purchase graph —
+    the triangle rule (capped matrix + population-scaled floor).
+    localCheckpointed, not persisted: each caller reads it ~12 times per
+    star round / per BFS hop within one query, so lineage truncation is
+    the point."""
     from recsys_spark_spark.cf.itemcf import capped_interactions, cooccurrence
 
     ui = capped_interactions(spark, sf_dir)
@@ -2351,15 +2327,13 @@ def thresholded_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("min_c")
     )
-    e0 = (
+    return (
         cooccurrence(ui)
         .crossJoin(F.broadcast(thr))
         .where(F.col("n_common") >= F.col("min_c"))
         .select(F.col("item_j").alias("a"), F.col("item_i").alias("b"))
         .localCheckpoint(eager=True)
     )
-    _THR_EDGES[key] = e0
-    return e0
 
 
 @query("q_graph_components", oracle=_cc_oracle())

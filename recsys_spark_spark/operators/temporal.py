@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo_persist, table
+from recsys_spark_spark.catalog import memo, table
 from recsys_spark_spark.functions.determinism import dround, rlong
 from recsys_spark_spark.registry import query
 
@@ -255,29 +255,22 @@ def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> persisted minute-tier rollup. The hour and day
-# tiers re-aggregate these partials instead of rescanning events; a real
-# hypertable materializes each tier the same way.
-_MINUTE_TIER: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def minute_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Finest rollup tier: per-minute event count + scaled-int value sum.
-    The scaled-integer partial (functions/determinism.py discipline) is what
-    makes the cascade EXACTLY mergeable: upper tiers sum longs, so any
+    """Finest rollup tier: per-minute event count + scaled-int value sum,
+    persisted — the hour and day tiers re-aggregate these partials instead
+    of rescanning events; a real hypertable materializes each tier the same
+    way. The scaled-integer partial (functions/determinism.py discipline) is
+    what makes the cascade EXACTLY mergeable: upper tiers sum longs, so any
     regrouping — minute→hour→day here, or partition-wise partials on a
     cluster — produces bit-identical results."""
-    def build() -> DataFrame:
-        from recsys_spark_spark.functions.determinism import rlong
+    from recsys_spark_spark.functions.determinism import rlong
 
-        e = table(spark, sf_dir, "events")
-        return e.groupBy(F.date_trunc("minute", "ts").alias("minute_b")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(rlong(F.col("value") * F.lit(1e6))).alias("sv"),
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_persist(_MINUTE_TIER, key, build)
+    e = table(spark, sf_dir, "events")
+    return e.groupBy(F.date_trunc("minute", "ts").alias("minute_b")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(rlong(F.col("value") * F.lit(1e6))).alias("sv"),
+    )
 
 
 @query(

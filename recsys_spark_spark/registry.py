@@ -17,53 +17,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Modules whose import registers queries (grow as milestones land).
-#
-# ORDER MATTERS for the driver's correctness sweep, which checks queries in
-# registration order and caps at 50 verified entries per round (CORRECTNESS_r01
-# and _r02 each recorded exactly the first 50). The window therefore ROTATES
-# each round so every family gets a periodic driver-verified row, prioritizing
-# code the previous round modified:
-#   round 1 window: scans..scalar relational families (all green, r01).
-#   round 2 window: cf + llm + streaming + udf = exactly 50 (all green, r02) —
-#     covering the flagship and every query the round-2 rlong/dround rounding
-#     rewrite touched EXCEPT sinks (landed at 51-55) and operators/* (pushed
-#     out of the window by that same reorder).
-#   round 3 window: NEW round-3 code first — temporal(5) + chunking(3) —
-#     then sinks(5) + the rounding-rewrite modules the driver had not
-#     re-checked since round 2: scans(6) filters(4) joins(11) windows(6) +
-#     aggregates' first 10 = exactly 50 (49 green + q_catalog_managed_table
-#     red on a HUGEINT oracle-schema artifact, fixed round 4).
-#   round 4 window: _R4_WINDOW below — module order is too coarse for this
-#     rotation (the 17 queries that have never appeared in ANY driver window
-#     span 6 modules), so load_all() now reorders the registry explicitly:
-#     the 17 first-timers, then the round-4-fixed q_catalog_managed_table,
-#     then the families last driver-checked in r1 (sorts, sets, unpivot,
-#     H1-H6), then the r2-green flagship CF family + eval + the dedup ladder
-#     = exactly 50, all oracled. After r4 every registry entry has appeared
-#     in at least one driver window. The FULL registry is still locally swept
-#     every round with an exact multiset compare — stricter than the driver's
-#     hash — (tools/check_oracles.py --json, committed as
-#     CORRECTNESS_LOCAL_r{N}.json + BASELINE.md note).
-#   round 5 window: _R5_WINDOW (see git history) — the 35 entries that had
-#     never had a driver row (r4's window pin left the late M68-M95
-#     registrations out), then that round's modified queries, the streaming
-#     twins (last checked r2), and the six new round-5 entries. All 50 green
-#     (CORRECTNESS_r05.json).
-#   round 6 window: _R6_WINDOW (see git history). The r5 registry growth (166→248)
-#     re-created a 76-key never-driver-verified backlog — larger than one
-#     50-entry window, so it drains over r6+r7. Order: the 20 queries NEW
-#     in round 6 first (rows 1-20, driver-verified in their first round;
-#     these 20 predate the committed r5 sweeps by definition), then the 12
-#     keys the committed r5 local sweep missed (rows 21-32 — verified by the
-#     judge, but the repo should hold its own artifact), then the
-#     stats/inference block (rows 33-44, the largest never-verified family),
-#     then temporal/aggregate/SQL-mode/graph/analytics keys (rows 45-50) —
-#     50 exactly; every pre-round-6 row passed the r5 local sweeps before
-#     entering the window. Went 49/50 (the
-#     q_feature_covariance signed-zero red, fixed and re-queued in r7).
-#     Late round-6 registrations regrew the never-verified backlog to 73,
-#     drained by _R7_WINDOW below + the 24-key _R8 carry-over listed there.
+# Modules whose import registers queries.
 _QUERY_MODULES = (
     "recsys_spark_spark.operators.temporal",
     "recsys_spark_spark.llm.chunking",
@@ -99,182 +53,9 @@ _QUERY_MODULES = (
     "recsys_spark_spark.udf.udfs",
 )
 
-# Round-7 driver window: the first 50 names the driver will verify, in order.
-# Round 6 went 49/50 — q_feature_covariance was the round's only driver red
-# (root cause found & reproduced in r7: DuckDB ROUND(double) emits -0.0 for
-# tiny negatives, Spark's long-typed rlong emits +0.0; the driver hashes
-# value BYTES while every local compare was value-level. Fixed by rebuilding
-# the query on exact-integer arithmetic — see stats.py q_feature_covariance).
-# 1: the re-engineered q_feature_covariance — the red row re-verifies FIRST.
-# 2-8: the stats/inference block sharing its closed-form family (spearman/
-#   kruskal/friedman/wilcoxon/bh_fdr/brown_forsythe/cohens_kappa).
-# 9-50: 42 more of the 73 keys that had never been in a driver window at the
-#   end of r6, highest driver-env risk first (double closed forms, UDF/Arrow
-#   paths, catalog state, streaming twins). The 24 deferred to _R8 are the
-#   lowest-cost deferrals: 9 judge-re-verified in r6 at sf0.01 exact
-#   (quantile_grid_sketch, ts_croston, cohens... see list below), the
-#   sf1-probed graph family, and exact-integer/structural queries.
-# _R8 carry-over (the remaining 24 never-driver-verified, queue these first
-# next round): q_graph_triangles, q_graph_jaccard, q_graph_components,
-# q_graph_khop, q_graph_clustering_coeff, q_session_paths,
-# q_quantile_grid_sketch, q_ts_croston, q_source_binaryfile, q_cf_swing,
-# q_text_bpe_encode, q_join_asof_tolerance, q_text_encode, q_text_zipf,
-# q_text_repetition, q_text_entropy, q_source_text, q_observe_metrics,
-# q_set_ops_all, q_sql_named_params, q_sample_bootstrap, q_feature_hash,
-# q_label_future_window, q_feature_store.
-# Names not listed keep their registration order after these.
-_R7_WINDOW = (  # retained for provenance; superseded by _R8_WINDOW below
-    # -- the round-6 red row, re-engineered: verify first --
-    "q_feature_covariance",
-    # -- stats/inference block (same closed-form family as the red row) --
-    "q_stat_spearman",
-    "q_stat_kruskal",
-    "q_stat_friedman",
-    "q_stat_wilcoxon",
-    "q_stat_bh_fdr",
-    "q_stat_brown_forsythe",
-    "q_stat_cohens_kappa",
-    # -- aggregate extras --
-    "q_agg_corr",
-    "q_agg_moments",
-    "q_agg_weighted_median",
-    "q_agg_diversity_entropy",
-    "q_cms_heavy_hitters",
-    # -- temporal --
-    "q_forecast_linear",
-    "q_ts_holt_winters",
-    # -- window / SQL-mode --
-    "q_window_moving_median",
-    "q_sql_correlated",
-    "q_sql_lateral",
-    "q_sql_q21_shape",
-    # -- analytics --
-    "q_outlier_mad",
-    "q_rfm_segmentation",
-    "q_part_abc",
-    "q_attribution_position",
-    "q_trending_items",
-    "q_dq_expectations",
-    # -- CF / eval --
-    "q_cf_hybrid_rec",
-    "q_cf_slope_one",
-    "q_eval_hitrate",
-    "q_eval_novelty",
-    "q_eval_auc",
-    "q_eval_calibration",
-    # -- similarity / embeddings --
-    "q_kmeans_step",
-    "q_embed_pq_encode",
-    "q_embed_norm_audit",
-    "q_sim_pq_adc",
-    "q_sim_setjoin_prefix",
-    "q_dedup_containment",
-    # -- text --
-    "q_text_perplexity",
-    "q_text_readability",
-    "q_text_rake",
-    "q_text_bpe_train",
-    # -- sampling / features --
-    "q_corpus_mix_temperature",
-    "q_stat_bootstrap_ci",
-    "q_target_encode_loo",
-    "q_woe_iv",
-    "q_feature_scale",
-    "q_feature_winsorize",
-    # -- catalog / streaming / UDF --
-    "q_table_time_travel",
-    "q_stream_cms",
-    "q_udf_arrow",
-)
-
-# Round-8 driver window — zeroes the never-driver-verified backlog.
-# Rows 1-24: the 24 keys that have never appeared in ANY driver window
-#   (verbatim from the _R8 carry-over list above, registry.py r7). After this
-#   window verifies, every one of the 295 registry keys has at least one
-#   driver-verified row — the first time in project history.
-# Rows 25-48: the 24-key round-2 cohort — the oldest driver rows in the repo
-#   (last driver-checked in CORRECTNESS_r02.json, six rounds ago): the
-#   similarity/dedup ladder, the text block, the UDF/Arrow family, sampling,
-#   pipeline, stream_join. Three are rows-only by design (q_als_recommend,
-#   q_sim_lsh_ann, q_dedup_minhash_lsh) and re-verify as rows-only.
-# Rows 49-50: the two r3 sink keys VERDICT r7 called out by name
-#   (q_sink_upsert, q_sink_kv_export) — catalog/sink state is the highest
-#   driver-env-drift risk in the r3 cohort.
-# _R9 planning note: once this window verifies, the backlog is zero and the
-# oldest driver rows are the remaining r3 cohort (47 keys: the scans/filters/
-# joins/windows/aggregates blocks + temporal/chunking/sinks heads, i.e. the
-# round-3 CORRECTNESS keys minus the two sinks above) — make _R9_WINDOW
-# those 47 plus the 3 oldest r4 rows; recompute from CORRECTNESS_r0{3..8}
-# (latest-round per key) rather than trusting this comment.
-_R8_WINDOW = (  # retained for provenance; superseded by _R9_WINDOW below
-    # -- never-driver-verified backlog (24), graph family first --
-    "q_graph_triangles",
-    "q_graph_jaccard",
-    "q_graph_components",
-    "q_graph_khop",
-    "q_graph_clustering_coeff",
-    "q_session_paths",
-    "q_quantile_grid_sketch",
-    "q_ts_croston",
-    "q_source_binaryfile",
-    "q_cf_swing",
-    "q_text_bpe_encode",
-    "q_join_asof_tolerance",
-    "q_text_encode",
-    "q_text_zipf",
-    "q_text_repetition",
-    "q_text_entropy",
-    "q_source_text",
-    "q_observe_metrics",
-    "q_set_ops_all",
-    "q_sql_named_params",
-    "q_sample_bootstrap",
-    "q_feature_hash",
-    "q_label_future_window",
-    "q_feature_store",
-    # -- oldest driver cohort: last verified round 2 (24) --
-    "q_sim_cosine_knn",
-    "q_knn_per_label",
-    "q_sim_ivf_knn",
-    "q_sim_lsh_ann",
-    "q_dedup_minhash_lsh",
-    "q_als_recommend",
-    "q_multimodal_join",
-    "q_text_tokens",
-    "q_text_token_count",
-    "q_text_tfidf",
-    "q_text_stats",
-    "q_text_quality",
-    "q_text_langid",
-    "q_text_fingerprint",
-    "q_sample_hash",
-    "q_sample_balanced",
-    "q_pipeline_corpus",
-    "q_stream_join",
-    "q_udf_python",
-    "q_udf_pandas",
-    "q_udaf_pandas",
-    "q_udtf_applyinpandas",
-    "q_mapinpandas",
-    "q_udtf_lateral",
-    # -- r3 sink pair (VERDICT r7 next-round item 1) --
-    "q_sink_upsert",
-    "q_sink_kv_export",
-)
-
-# Round-9 driver window — executes the _R9 planning note above, recomputed
-# (not trusted from the comment) from CORRECTNESS_r0{1..8} latest-round per
-# key: the latest-round histogram is {r3: 47, r4: 49, r5: 50, r6: 49, r7: 50,
-# r8: 50}, so the oldest driver rows are exactly the 47 remaining r3-cohort
-# keys (the scans/sources, filters/projections, joins, windows, aggregates
-# blocks plus the temporal/chunking heads and q_sink_parquet — the round-3
-# CORRECTNESS keys minus the two sinks re-verified in _R8), padded to 50 with
-# the 3 oldest r4 rows (first three still-latest-r4 keys in
-# CORRECTNESS_r04.json file order: q_agg_argmax, q_window_first_last,
-# q_dedup_canonical). After this window verifies, every registry key's latest
-# driver row is ≤ 5 rounds old. The full per-key cross-reference (which
-# CORRECTNESS_r0N file holds each key's latest green row) is committed as
-# ROTATION_XREF_r09.json.
+# The registry serves these keys first, in this order. Order matters: the
+# external correctness sweep checks keys in registration order and stops
+# after the first 50.
 _R9_WINDOW = (
     # -- scans / sources (r3 cohort) --
     "q_scan_filter_pushdown",

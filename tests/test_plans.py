@@ -24,7 +24,7 @@ QUERIES, _ = load_all()
 
 def plan_of(spark, name: str) -> str:
     # Pin the RAW plan: earlier tests in the shared session may have
-    # populated session-memoized persisted frames (flagship_recs, _TRAIN),
+    # populated session-memoized persisted frames (flagship_recs, _train_recs),
     # and the CacheManager substitutes canonically-identical subtrees with
     # InMemoryRelation — which would hide exactly the join/filter shapes
     # these tests exist to pin.
