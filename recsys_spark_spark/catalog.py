@@ -17,7 +17,6 @@ memory, and Spark's InMemoryFileIndex on the handle keeps the file listing.
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,11 +33,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Small dimension tables: always broadcast-join these (SURVEY.md §5).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # (applicationId, sf_dir, name) -> DataFrame handle. applicationId is unique
 # per SparkSession lifetime, so a handle can never leak across sessions

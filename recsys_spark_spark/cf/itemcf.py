@@ -979,8 +979,6 @@ def q_cf_incremental_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M93: sequential-recommendation training windows
 # --------------------------------------------------------------------------
 
-SEQ_LEN = 3  # input-sequence length; the next item is the label
-
 
 @query(
     "q_seq_windows",

@@ -48,6 +48,69 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- duplicate-mass cap: collapse exact copies, pair classes, expand -------
+#
+# Exact copies make every pair operator quadratic in the copy count: c
+# copies of one text in a block are c²/2 candidate pairs, each paying the
+# full token or signature work, and a real corpus has mega-duplicated
+# boilerplate. The pair operators below therefore run on one representative
+# per exact-copy class and expand the result back to document pairs.
+#
+# Exactness: a class key fixes the text (md5(text) or the text itself), and
+# identical text has identical tokens, shingles, lengths and signatures. So
+# a pair of members drawn from two classes has exactly the score of the
+# representatives' pair, and a pair inside one class is a pair of identical
+# texts, whose score is a constant (Jaccard 1.0, distance 0.0). The pair
+# work is class-sized; the expansion is output-sized, and those pairs exist.
+
+
+def _exact_dup_groups(d: DataFrame, *key: str) -> tuple[DataFrame, DataFrame]:
+    """Collapse exact copies of `d` (doc_id plus columns) into classes of
+    equal `key` columns. Returns (groups, mem): groups holds one row per
+    class, with the key, the MIN doc_id as representative, that document's
+    value of every other column of `d`, and the multiplicity m; mem is the
+    member map (rep, doc_id), one row per document."""
+    carry = [c for c in d.columns if c != "doc_id" and c not in key]
+    groups = d.groupBy(*key).agg(
+        F.min("doc_id").alias("doc_id"),
+        *[F.min_by(c, "doc_id").alias(c) for c in carry],
+        F.count(F.lit(1)).alias("m"),
+    )
+    mem = d.join(
+        groups.select(*key, F.col("doc_id").alias("rep")), list(key)
+    ).select("rep", "doc_id")
+    return groups, mem
+
+
+def _text_classes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """_exact_dup_groups over `documents` keyed by (md5(text), lang,
+    n_chars): the blocks of the near-dup operators are class-constant."""
+    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars", "text")
+    return _exact_dup_groups(d.withColumn("h", F.md5("text")), "h", "lang", "n_chars")
+
+
+def _expand_pairs(rep_pairs: DataFrame, mem: DataFrame, within: float) -> DataFrame:
+    """Class pairs (d1, d2, score) plus the member map (rep, doc_id) ->
+    document pairs (d1 < d2, score): each cross-class member pair takes its
+    classes' score, each within-class pair the constant `within`."""
+    score = rep_pairs.columns[2]
+    ma = mem.select(F.col("rep").alias("d1"), F.col("doc_id").alias("da"))
+    mb = mem.select(F.col("rep").alias("d2"), F.col("doc_id").alias("db"))
+    cross = (
+        rep_pairs.join(ma, "d1")
+        .join(mb, "d2")
+        .select(F.least("da", "db").alias("d1"), F.greatest("da", "db").alias("d2"), score)
+    )
+    wa = mem.select("rep", F.col("doc_id").alias("d1"))
+    wb = mem.select("rep", F.col("doc_id").alias("d2"))
+    same = (
+        wa.join(wb, "rep")
+        .where(F.col("d1") < F.col("d2"))
+        .select("d1", "d2", F.lit(within).alias(score))
+    )
+    return cross.unionAll(same)
+
+
 @query(
     "q_dedup_near_sql",
     oracle="""
@@ -78,94 +141,16 @@ WHERE n_common / (s1.n + s2.n - n_common) >= 0.9
 def q_dedup_near_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: blocked token-Jaccard near-dup candidates (threshold 0.9).
 
-    Duplicate-mass cap + mask prefilter (r9, VERDICT r8 #4 — this was the
-    registry's worst sf1 entry at 9.7x for 10x data): exact copies flood a
-    (lang, n_chars) block, so candidate pairs and the token-intersection hit
-    mass both grow as copies². Two proven r8 patterns close it:
-
-      * rep-collapse (_exact_dup_groups, the q_dedup_ngram shape): the
-        blocked join + token intersect run on ONE representative per
-        (md5(text), lang, n_chars) class. Identical text ⇒ identical token
-        set and size ⇒ every member pair of a rep pair shares the rep pair's
-        EXACT n_common and jaccard; within-class pairs are jaccard exactly
-        1.0 (n/n — split() always yields ≥1 token, matching DuckDB
-        string_split, so every identical-text pair clears the 0.9 threshold
-        on both engines). Doc pairs reconstruct through output-sized member
-        joins; the quadratic engine work is class-level.
-      * 256-bit token-bitmask + size prune (_token_mask_cols, the
-        _near_dup_edges algebra — both are NECESSARY conditions for
-        J = c/(n1+n2-c) >= 0.9 with c <= min(n1,n2) and
-        popcount(m1|m2) =: pu <= |A∪B| = u:
-        10c >= 9u ⟹ 10·min(n1,n2) >= 9·max(n1,n2) and
-        10(n1+n2) >= 19u >= 19·pu), so only provable non-pairs are pruned
-        before the token fan-out; survivors take the unchanged exact
-        intersect and the rounded jaccard is byte-identical."""
-    docs, groups = _exact_dup_groups(table(spark, sf_dir, "documents"))
-    reps = groups.select("doc_id", "lang", "n_chars", "text")
-    tok = reps.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token")
-    )
-    meta = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"), *_token_mask_cols("token")
-    )
-    a = reps.select(F.col("doc_id").alias("r1"), "lang", "n_chars")
-    b = reps.select(F.col("doc_id").alias("r2"), "lang", "n_chars")
-    cand = a.join(b, ["lang", "n_chars"]).where(F.col("r1") < F.col("r2")).select("r1", "r2")
-    m1 = meta.select(
-        F.col("doc_id").alias("r1"), F.col("n").alias("n1"),
-        *[F.col(f"mk{w}").alias(f"a{w}") for w in range(4)],
-    )
-    m2 = meta.select(
-        F.col("doc_id").alias("r2"), F.col("n").alias("n2"),
-        *[F.col(f"mk{w}").alias(f"b{w}") for w in range(4)],
-    )
-    pu = sum(
-        F.bit_count(F.col(f"a{w}").bitwiseOR(F.col(f"b{w}"))) for w in range(4)
-    )
-    pre = (
-        cand.join(m1, "r1")
-        .join(m2, "r2")
-        .where(F.least("n1", "n2") * 10 >= F.greatest("n1", "n2") * 9)
-        .where((F.col("n1") + F.col("n2")) * 10 >= pu * 19)
-        .select("r1", "r2", "n1", "n2")
-    )
-    t1 = tok.select(F.col("doc_id").alias("r1"), "token")
-    t2 = tok.select(F.col("doc_id").alias("r2"), "token")
-    inter = (
-        pre.join(t1, "r1")
-        .join(t2, ["r2", "token"])
-        .groupBy("r1", "r2", "n1", "n2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    rep_pairs = inter.where(jac >= 0.9).select(
-        "r1", "r2", F.round(jac, 6).alias("jaccard")
-    )
-    # Expansion back to doc pairs (output-sized): cross-class pairs through
-    # the member join, within-class pairs at jaccard exactly 1.0.
-    mem = docs.join(
-        groups.select("h", "lang", "n_chars", F.col("doc_id").alias("rep")),
-        ["h", "lang", "n_chars"],
-    ).select("rep", "doc_id")
-    ma = mem.select(F.col("rep").alias("r1"), F.col("doc_id").alias("da"))
-    mb = mem.select(F.col("rep").alias("r2"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ma, "r1")
-        .join(mb, "r2")
-        .select(
-            F.least("da", "db").alias("d1"),
-            F.greatest("da", "db").alias("d2"),
-            "jaccard",
-        )
-    )
-    wa = mem.select("rep", F.col("doc_id").alias("d1"))
-    wb = mem.select("rep", F.col("doc_id").alias("d2"))
-    within = (
-        wa.join(wb, "rep")
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    Runs on the exact-copy classes (_exact_dup_groups); the class pairs of
+    one (lang, n_chars) block go through the token-Jaccard verifier
+    (_jaccard_edges). Identical texts always share a token (split() yields
+    at least one, as DuckDB string_split does), so every within-class pair
+    is in the oracle at jaccard 1.0."""
+    groups, mem = _text_classes(spark, sf_dir)
+    a = groups.select(F.col("doc_id").alias("d1"), "lang", "n_chars")
+    b = groups.select(F.col("doc_id").alias("d2"), "lang", "n_chars")
+    cand = a.join(b, ["lang", "n_chars"]).where(F.col("d1") < F.col("d2")).select("d1", "d2")
+    return _expand_pairs(_jaccard_edges(groups, cand), mem, 1.0)
 
 
 @query(
@@ -206,20 +191,11 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingling is a per-row array transform (no shuffle), the candidate join
     and intersection are both block-keyed.
 
-    Duplicate-mass cap (r8 — the registry's last >10x sf1 entry): the
-    shingle-intersection hit mass grows as copies² × shingles-per-doc when
-    exact copies flood a block, and every hit flows through the n_common
-    aggregate. The chain now runs on ONE representative per
-    (md5(text), lang, n_chars) class (_exact_dup_groups, the proven
-    pattern): identical text ⇒ identical shingle set and size ⇒ every
-    member pair of a rep pair shares the rep pair's EXACT n_common and
-    jaccard, and within-class pairs are jaccard 1.0 (emitted only when the
-    class has ≥1 bigram — empty-shingle docs never reach the oracle's
-    inner joins either). Doc pairs reconstruct through output-sized member
-    joins; the quadratic engine work is class-level."""
-    docs, groups = _exact_dup_groups(table(spark, sf_dir, "documents"))
-    reps = groups.select("doc_id", "lang", "n_chars", "text")
-    toks = reps.select("doc_id", F.split("text", " ").alias("t"))
+    Runs on the exact-copy classes (_exact_dup_groups). A document with
+    fewer than two tokens has no shingle and so no pair in the oracle, even
+    with its own copies: only classes with a shingle are expanded."""
+    groups, mem = _text_classes(spark, sf_dir)
+    toks = groups.select("doc_id", F.split("text", " ").alias("t"))
     # sequence(1, size-1) descends when size < 2 — guard to an empty list
     # (matches DuckDB generate_series, which is empty when stop < start).
     bigrams = F.when(
@@ -228,52 +204,27 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     sh = toks.select("doc_id", F.explode(F.array_distinct(bigrams)).alias("s"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = reps.select(F.col("doc_id").alias("r1"), "lang", "n_chars")
-    b = reps.select(F.col("doc_id").alias("r2"), "lang", "n_chars")
-    cand = a.join(b, ["lang", "n_chars"]).where(F.col("r1") < F.col("r2")).select("r1", "r2")
-    s1 = sh.select(F.col("doc_id").alias("r1"), "s")
-    s2 = sh.select(F.col("doc_id").alias("r2"), "s")
+    a = groups.select(F.col("doc_id").alias("d1"), "lang", "n_chars")
+    b = groups.select(F.col("doc_id").alias("d2"), "lang", "n_chars")
+    cand = a.join(b, ["lang", "n_chars"]).where(F.col("d1") < F.col("d2")).select("d1", "d2")
+    s1 = sh.select(F.col("doc_id").alias("d1"), "s")
+    s2 = sh.select(F.col("doc_id").alias("d2"), "s")
     inter = (
-        cand.join(s1, "r1")
-        .join(s2, ["r2", "s"])
-        .groupBy("r1", "r2")
+        cand.join(s1, "d1")
+        .join(s2, ["d2", "s"])
+        .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    n1 = sizes.select(F.col("doc_id").alias("r1"), F.col("n").alias("n1"))
-    n2 = sizes.select(F.col("doc_id").alias("r2"), F.col("n").alias("n2"))
+    n1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
+    n2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
     rep_pairs = (
-        inter.join(n1, "r1")
-        .join(n2, "r2")
-        .select("r1", "r2", F.round(jac, 6).alias("jaccard"))
+        inter.join(n1, "d1")
+        .join(n2, "d2")
+        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
     )
-    mem = docs.join(
-        groups.select("h", "lang", "n_chars", F.col("doc_id").alias("rep")),
-        ["h", "lang", "n_chars"],
-    ).select("rep", "doc_id")
-    ma = mem.select(F.col("rep").alias("r1"), F.col("doc_id").alias("da"))
-    mb = mem.select(F.col("rep").alias("r2"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ma, "r1")
-        .join(mb, "r2")
-        .select(
-            F.least("da", "db").alias("d1"),
-            F.greatest("da", "db").alias("d2"),
-            "jaccard",
-        )
-    )
-    # within-class pairs: jaccard exactly 1.0, but ONLY for classes whose
-    # text has at least one bigram (a sizes row) — single-token/empty docs
-    # never produce intersection rows in the per-doc formulation.
-    shingled_reps = sizes.select(F.col("doc_id").alias("rep"))
-    wa = mem.join(shingled_reps, "rep").select("rep", F.col("doc_id").alias("d1"))
-    wb = mem.select("rep", F.col("doc_id").alias("d2"))
-    within = (
-        wa.join(wb, "rep")
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionByName(within)
+    shingled = mem.join(sizes.select(F.col("doc_id").alias("rep")), "rep")
+    return _expand_pairs(rep_pairs, shingled, 1.0)
 
 
 _EMBED_DEDUP_TAU = 0.2
@@ -316,8 +267,8 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell; the zip_with/aggregate scaled-integer dot keeps the fold JVM-side
     and bit-identical across engines and partitionings.
 
-    Duplicate-mass cap (round-7; sf1 probe measured **80.4×** for 10× data
-    — the repo's worst densification: exact-duplicate vectors multiply the
+    Duplicate-mass cap (an sf1 probe measured **80.4×** for 10× data — the
+    repo's worst densification: exact-duplicate vectors multiply the
     within-cell pair count by copies², each pair paying a 64-lane dot
     fold). The dot/cosine work now runs on ONE representative per
     (label, embedding) class (bitwise-identical vectors ⇒ identical dot,
@@ -447,37 +398,26 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_dedup_minhash_lsh")  # rows-only: LSH banding is seed-dependent
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: MinHash-LSH near-dup at scale — shingle→minhash→band→bucket join
-    via MLlib (pyspark.ml.feature.MinHashLSH.approxSimilarityJoin).
+    via MLlib's seeded MinHashLSH.
 
-    Duplicate-mass cap (round-7, the last uncapped quadratic in the dedup
-    family): exact copies land in every bucket together, and MLlib's
-    bucket self-join grows as copies² inside a single task — the straggler
-    already visible at sf0.1 (one 5-10 min task in every full sweep). The
-    seeded MLlib chain now fits/joins on ONE representative per distinct
-    text (identical text ⇒ identical token vector ⇒ identical seeded
-    MinHash, buckets and distances), and the doc-pair output reconstructs
-    through output-sized member joins — cross pairs inherit the rep pair's
-    jaccard_dist, within-group pairs are exact duplicates at distance 0.0
-    (always inside the 0.2 threshold). Same expansion proof as
-    q_dedup_near_bucketed; the recall gate (tests/test_recall.py) still
-    measures the doc-pair output against an independent truth set.
+    Runs on the exact-copy classes of `text` (_exact_dup_groups): exact
+    copies land in every bucket together, and MLlib's bucket self-join
+    grows as copies² inside a single task (one 5-10 min task in every sf0.1
+    sweep before the collapse). Within-class pairs are at distance 0.0,
+    always inside the 0.2 threshold.
 
-    Vocabulary-ordering sensitivity (ADVICE r7): fitting CountVectorizer on
-    the DEDUPED texts changes corpus term frequencies and hence vocabulary
-    index order, which permutes the seeded MinHash values and bucket
-    collisions — candidate recall for NON-identical near-dup pairs can
-    differ from the pre-r7 doc-level fit, so row counts are NOT comparable
-    across that change. Acceptable for a seed-dependent rows-only query;
-    the behavioral contract is the recall gate
-    (tests/test_recall.py::test_mllib_minhash_lsh_recall, >=0.9 vs an
-    independent exact-Jaccard truth set — re-verified green after the
-    collapse, r8)."""
+    Fitting CountVectorizer on the classes rather than the documents
+    changes term frequencies and so the vocabulary order, which permutes
+    the seeded MinHash values: candidate recall for non-identical pairs
+    differs from a document-level fit, so row counts are not comparable
+    with one. The behavioral contract is the recall gate
+    (tests/test_recall.py::test_mllib_minhash_lsh_recall, >= 0.9 against
+    an independent exact-Jaccard truth set)."""
     from pyspark.ml.feature import CountVectorizer, MinHashLSH, Tokenizer
     from pyspark.ml.functions import vector_to_array
 
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    g = d.groupBy("text").agg(
-        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("m")
+    g, mem = _exact_dup_groups(
+        table(spark, sf_dir, "documents").select("doc_id", "text"), "text"
     )
     toks = Tokenizer(inputCol="text", outputCol="tokens").transform(
         g.select("doc_id", "text")
@@ -489,15 +429,15 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_model = lsh.fit(vecs)
     # Banded candidate join spelled out instead of approxSimilarityJoin —
     # SAME MLlib hashing (seeded fit/transform, identical buckets), same
-    # output, radically less work (r8 optimization, guide §1.2/§4.4).
-    # approxSimilarityJoin builds `explode(hashes) ⋈ explode(hashes)` then
-    # `.distinct()` then filters on its keyDistance UDF; Catalyst pushes
+    # output, radically less work. approxSimilarityJoin builds
+    # `explode(hashes) ⋈ explode(hashes)` then `.distinct()` then filters
+    # on its keyDistance UDF; Catalyst pushes
     # that deterministic UDF filter BELOW the distinct into the join
     # condition, so the Jaccard UDF runs once per raw bucket COLLISION —
     # measured 122.5M evaluations at sf0.1 for 2.96M distinct candidates
     # (41×), 356 s of CPU in a single task (the bytes-tiny rep aggregate
     # also left the whole chain on ONE AQE-coalesced partition). Here the
-    # candidate pairs are reduced to distinct (r1, r2) FIRST, and the
+    # candidate pairs are reduced to distinct (d1, d2) FIRST, and the
     # distance — identical arithmetic to MinHashLSH.keyDistance: 1 −
     # |A∩B|/|A∪B| over the binary-feature index sets, which for this
     # untruncated vocabulary are exactly the distinct-token sets — is
@@ -510,31 +450,32 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.posexplode("hashes").alias("entry", "hv"))
         .select("doc_id", "entry", vector_to_array("hv")[0].alias("h"))
     )
-    ea = ex.select(F.col("doc_id").alias("r1"), "entry", "h")
-    eb = ex.select(F.col("doc_id").alias("r2"), "entry", "h")
+    ea = ex.select(F.col("doc_id").alias("d1"), "entry", "h")
+    eb = ex.select(F.col("doc_id").alias("d2"), "entry", "h")
     cand = (
         ea.join(eb, ["entry", "h"])
-        .where(F.col("r1") < F.col("r2"))
-        .select("r1", "r2")
+        .where(F.col("d1") < F.col("d2"))
+        .select("d1", "d2")
         .distinct()
     )
-    # Distance representation (r8 measure-first follow-up, guide §1.2):
-    # array_intersect/array_distinct per candidate measured 439.5 s wall /
-    # ~14,000 s CPU for the 12.4M distinct candidates at sf0.1 (~1 ms/pair
-    # — the per-call hash-set build dominates), vs 9.3 s for candidate
-    # generation itself. When the fitted vocabulary fits in 64 bits —
-    # known on the driver from len(model.vocabulary); 31 at every test SF
-    # of this template corpus — each distinct-token set is a bitmask and
-    # the SAME integers |A∩B| / |A∪B| are bit_count(m1&m2) /
-    # bit_count(m1|m2): identical doubles out of the identical division,
-    # at ~ns/pair. Vocabularies wider than 64 keep the array path.
+    # Distance representation: array_intersect/array_distinct per candidate
+    # measured 439.5 s wall / ~14,000 s CPU for the 12.4M distinct
+    # candidates at sf0.1 (~1 ms/pair — the per-call hash-set build
+    # dominates), vs 9.3 s for candidate generation itself. When the fitted
+    # vocabulary fits in 64 bits — known on the driver from
+    # len(model.vocabulary); 31 at every test SF of this template corpus —
+    # each distinct-token set is a bitmask and the SAME integers |A∩B| /
+    # |A∪B| are bit_count(m1&m2) / bit_count(m1|m2): identical doubles out
+    # of the identical division, at ~ns/pair. Bit 63 is the sign bit of the
+    # long (py4j passes no literal above 2^63 - 1). Vocabularies wider than
+    # 64 keep the array path.
     vocab = model.vocabulary
     if len(vocab) <= 64:
         vmap = F.create_map(
             *[
                 F.lit(x)
-                for tok, i in ((t, i) for i, t in enumerate(vocab))
-                for x in (tok, 1 << i)
+                for i, tok in enumerate(vocab)
+                for x in (tok, 1 << i if i < 63 else -(1 << 63))
             ]
         )
         mask = F.aggregate(
@@ -549,37 +490,16 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok_sets = vecs.select("doc_id", F.array_distinct("tokens").alias("ts"))
         inter = F.size(F.array_intersect("ta", "tb"))
         union = F.size("ta") + F.size("tb") - inter
-    ta = F.broadcast(tok_sets.select(F.col("doc_id").alias("r1"), F.col("ts").alias("ta")))
-    tb = F.broadcast(tok_sets.select(F.col("doc_id").alias("r2"), F.col("ts").alias("tb")))
+    ta = F.broadcast(tok_sets.select(F.col("doc_id").alias("d1"), F.col("ts").alias("ta")))
+    tb = F.broadcast(tok_sets.select(F.col("doc_id").alias("d2"), F.col("ts").alias("tb")))
     dist = F.lit(1.0) - inter / union
     rep_pairs = (
-        cand.join(ta, "r1")
-        .join(tb, "r2")
+        cand.join(ta, "d1")
+        .join(tb, "d2")
         .where(dist < 0.2)
-        .select("r1", "r2", F.round(dist, 6).alias("jaccard_dist"))
+        .select("d1", "d2", F.round(dist, 6).alias("jaccard_dist"))
     )
-    mem = d.join(
-        g.select("text", F.col("doc_id").alias("rep")), "text"
-    ).select("rep", "doc_id")
-    ma = mem.select(F.col("rep").alias("r1"), F.col("doc_id").alias("da"))
-    mb = mem.select(F.col("rep").alias("r2"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_pairs.join(ma, "r1")
-        .join(mb, "r2")
-        .select(
-            F.least("da", "db").alias("d1"),
-            F.greatest("da", "db").alias("d2"),
-            "jaccard_dist",
-        )
-    )
-    wa = mem.select("rep", F.col("doc_id").alias("d1"))
-    wb = mem.select("rep", F.col("doc_id").alias("d2"))
-    within = (
-        wa.join(wb, "rep")
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", F.lit(0.0).alias("jaccard_dist"))
-    )
-    return cross.unionAll(within)
+    return _expand_pairs(rep_pairs, mem, 0.0)
 
 
 @query(
@@ -611,7 +531,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(token) as a 32-bit integer. Near-dup docs then differ in few bits
     (hamming distance over simhash16 — a bucket-join key at scale).
 
-    r9 (SF1_TAIL_PROBE, guide §2.6/§1.2): the tokenize+md5 fan-out is pure
+    SF1_TAIL_PROBE (guide §2.6/§1.2): the tokenize+md5 fan-out is pure
     per-row CPU bound to the single-row-group scan's 1-2 tasks (sf1 noop
     15.4 s, 9.9× for 10× data on a 32-core session) — spread() round-robins
     the doc scan across the session first; identity at scale (guarded).
@@ -680,69 +600,19 @@ def q_dedup_near_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     length predicate then prunes within blocks. Canonical (least, greatest)
     ordering + distinct collapses the double coverage of same-bucket pairs.
 
-    Duplicate-mass cap (round-7, same fix as q_dedup_clusters/setjoin —
-    sf1 probe measured **37.9×** for 10× data as exact copies densified
-    the length buckets: c copies cost c²/2 token-intersection candidates).
-    The blocked-Jaccard chain now runs on ONE representative per
-    (md5(text), lang, n_chars) class — identical attributes ⇒ identical
-    buckets, tokens and Jaccard — and the doc-pair output reconstructs
-    exactly through output-sized member joins: cross-group pairs inherit
-    the rep pair's rounded jaccard, within-group pairs are identical texts
-    (jaccard = 1.0, |n_chars diff| = 0 always qualifies). Output still
-    grows as copies² — those pairs exist — but the candidate/intersect
-    WORK is unique-text-sized. Oracle unchanged (doc-level SQL)."""
-    docs, groups = _exact_dup_groups(table(spark, sf_dir, "documents"))
-    rep_edges = _near_dup_edges(spark, groups)
-    mem = docs.join(
-        groups.select("h", "lang", "n_chars", F.col("doc_id").alias("rep")),
-        ["h", "lang", "n_chars"],
-    ).select("rep", "doc_id")
-    ma = mem.select(F.col("rep").alias("d1"), F.col("doc_id").alias("da"))
-    mb = mem.select(F.col("rep").alias("d2"), F.col("doc_id").alias("db"))
-    cross = (
-        rep_edges.join(ma, "d1")
-        .join(mb, "d2")
-        .select(
-            F.least("da", "db").alias("d1"),
-            F.greatest("da", "db").alias("d2"),
-            "jaccard",
-        )
-    )
-    wa = mem.select("rep", F.col("doc_id").alias("d1"))
-    wb = mem.select("rep", F.col("doc_id").alias("d2"))
-    within = (
-        wa.join(wb, "rep")
-        .where(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", F.lit(1.0).alias("jaccard"))
-    )
-    return cross.unionAll(within)
-
-
-def _exact_dup_groups(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Collapse exact duplicates for the duplicate-mass-capped operators:
-    returns (docs, groups) where docs carries h = md5(text) per document and
-    groups holds ONE representative row — the MIN doc_id, its text, and the
-    multiplicity m — per (md5(text), lang, n_chars) class. Identical text
-    implies identical n_chars and tokens, so every text-derived predicate
-    (length bucket, token Jaccard, shingle signature) is class-constant."""
-    docs = d.select("doc_id", "lang", "n_chars", "text").withColumn(
-        "h", F.md5("text")
-    )
-    groups = docs.groupBy("h", "lang", "n_chars").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.min_by("text", "doc_id").alias("text"),
-        F.count(F.lit(1)).alias("m"),
-    )
-    return docs, groups
+    Runs on the exact-copy classes (_exact_dup_groups): an sf1 probe
+    measured **37.9×** for 10× data as exact copies densified the length
+    buckets. Within-class pairs have |n_chars diff| = 0 and jaccard 1.0."""
+    groups, mem = _text_classes(spark, sf_dir)
+    return _expand_pairs(_near_dup_edges(groups), mem, 1.0)
 
 
 def _token_mask_cols(tokcol: str) -> list:
-    """256-bit token-bitmask aggregate columns (4 longs, bit
+    """256-bit token-bitmask aggregate columns mk0..mk3 (4 longs, bit
     pmod(xxhash64(tok), 256)) — the shared prefilter primitive of the
-    exact dedup/similarity verifiers (containment #20, near-dup edges
-    #25, setjoin #27): a token's bit is set in a doc's mask iff the doc
-    contains the token, so popcount identities give sound bounds on
-    intersection/union without touching the token arrays."""
+    exact dedup/similarity verifiers: a token's bit is set in a doc's mask
+    iff the doc contains the token, so popcount identities give sound
+    bounds on intersection/union without touching the token arrays."""
     return [
         F.bit_or(
             F.expr(
@@ -755,11 +625,68 @@ def _token_mask_cols(tokcol: str) -> list:
     ]
 
 
-def _near_dup_edges(spark: SparkSession, d: DataFrame) -> DataFrame:
-    """The J2c blocked token-Jaccard chain over any (doc_id, lang, n_chars,
-    text) frame — shared by the doc-level pair query and the
-    exact-duplicate-representative cluster builder (round-7 duplicate-mass
-    cap, same shape as _mh_pairs_frame)."""
+def _mask_prefilter(cand: DataFrame, meta: DataFrame, keep) -> DataFrame:
+    """Candidate pairs (d1, d2, ...) joined to both sides' row of `meta`
+    (doc_id, mk0..mk3 from _token_mask_cols, and other columns; column c
+    joins as c1 and c2), keeping those where `keep(pu)` holds. pu =
+    popcount(m1|m2) counts the bits either doc sets, and each bit needs a
+    token of A∪B, so pu <= |A∪B|: a threshold on the union bounds pu, and
+    only provable non-pairs are pruned."""
+    m1, m2 = (
+        meta.select(
+            *[F.col(c).alias(f"d{s}" if c == "doc_id" else f"{c}{s}") for c in meta.columns]
+        )
+        for s in (1, 2)
+    )
+    pu = sum(F.bit_count(F.col(f"mk{w}1").bitwiseOR(F.col(f"mk{w}2"))) for w in range(4))
+    return cand.join(m1, "d1").join(m2, "d2").where(keep(pu))
+
+
+def _jaccard_edges(d: DataFrame, cand: DataFrame) -> DataFrame:
+    """The candidate pairs (d1 < d2) of `d` (doc_id, text) whose
+    distinct-token Jaccard is >= 0.9, as (d1, d2, jaccard rounded to 6dp).
+
+    Size + 256-bit-bitmask prefilter before the exact token intersect. Both
+    prunes are NECESSARY conditions for J = c/(n1+n2-c) >= 0.9 (integer
+    arithmetic, c = |A∩B| <= min(n1,n2)):
+      * size:  J >= 0.9 ⟺ 19c >= 9(n1+n2) ⟹ 10·min(n1,n2) >= 9·max(n1,n2);
+      * mask:  10c >= 9u ⟹ 10(n1+n2) >= 19u >= 19·pu (u = |A∪B|).
+    Survivors take the unchanged exact intersect, so the edge set and the
+    rounded jaccard are byte-identical. At the fixture token counts (~23
+    distinct tokens/doc vs 256 bits) mask collisions are rare: measured at
+    sf0.1 on the bucketed candidates, 405,168 -> 101,806 survivors (75%
+    pruned; 67,800 true edges) before any token fan-out."""
+    tok = d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token"))
+    meta = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"), *_token_mask_cols("token")
+    )
+    pre = _mask_prefilter(
+        cand,
+        meta,
+        lambda pu: (F.least("n1", "n2") * 10 >= F.greatest("n1", "n2") * 9)
+        & ((F.col("n1") + F.col("n2")) * 10 >= pu * 19),
+    ).select("d1", "d2", "n1", "n2")
+    # An explicit width-pinned repartition on d1 before the token fan-out
+    # was tried and reverted on measurement: it demoted the token joins
+    # from broadcast to shuffle (stage CPU 19 s -> 60 s) and its wider
+    # partitioning leaked into the downstream label-propagation checkpoints
+    # (6 extra 66-task tiny stages per round).
+    t1 = tok.select(F.col("doc_id").alias("d1"), "token")
+    t2 = tok.select(F.col("doc_id").alias("d2"), "token")
+    inter = (
+        pre.join(t1, "d1")
+        .join(t2, ["d2", "token"])
+        .groupBy("d1", "d2", "n1", "n2")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return inter.where(jac >= 0.9).select("d1", "d2", F.round(jac, 6).alias("jaccard"))
+
+
+def _near_dup_edges(d: DataFrame) -> DataFrame:
+    """The J2c length-bucketed token-Jaccard edges of any (doc_id, lang,
+    n_chars, text) frame — shared by the pair query and the cluster
+    builder."""
     base = d.select("doc_id", "lang", "n_chars", (F.col("n_chars") / 32).cast("long").alias("bkt"))
     probe = base.select(
         "doc_id", "lang", "n_chars", F.explode(F.array(F.col("bkt"), F.col("bkt") + 1)).alias("bkt")
@@ -780,62 +707,7 @@ def _near_dup_edges(spark: SparkSession, d: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    tok = d.select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token"))
-    t1 = tok.select(F.col("doc_id").alias("d1"), "token")
-    t2 = tok.select(F.col("doc_id").alias("d2"), "token")
-    # Size + 256-bit-bitmask prefilter before the exact token intersect (the
-    # q_dedup_containment mask pattern; guide §3.2 reduce-before-the-
-    # expensive-operator). Both prunes are NECESSARY conditions for
-    # J = c/(n1+n2-c) >= 0.9 (integer arithmetic, c = |A∩B| <= min(n1,n2)):
-    #   * size:  J >= 0.9 ⟺ 19c >= 9(n1+n2) ⟹ 10·min(n1,n2) >= 9·max(n1,n2);
-    #   * mask:  the c common tokens set at most popcount(m1|m2) =: pu bits
-    #     and pu <= |A∪B| = u, so 10c >= 9u ⟹ 10(n1+n2) >= 19u >= 19·pu.
-    # Only provable non-edges are pruned; survivors take the unchanged exact
-    # intersect, so the edge set (and the rounded jaccard) is byte-identical.
-    # At the fixture token counts (~23 distinct tokens/doc vs 256 bits) mask
-    # collisions are rare, so the popcount bound tracks the true union and
-    # the survivor set approaches the true edges: measured at sf0.1,
-    # 405,168 candidates -> 101,806 survivors (75% pruned; the true edge
-    # count is 67,800) before any token fan-out.
-    meta = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"), *_token_mask_cols("token")
-    )
-    m1 = meta.select(
-        F.col("doc_id").alias("d1"), F.col("n").alias("n1"),
-        *[F.col(f"mk{w}").alias(f"a{w}") for w in range(4)],
-    )
-    m2 = meta.select(
-        F.col("doc_id").alias("d2"), F.col("n").alias("n2"),
-        *[F.col(f"mk{w}").alias(f"b{w}") for w in range(4)],
-    )
-    pu = sum(
-        F.bit_count(F.col(f"a{w}").bitwiseOR(F.col(f"b{w}"))) for w in range(4)
-    )
-    pre = (
-        cand.join(m1, "d1")
-        .join(m2, "d2")
-        .where(F.least("n1", "n2") * 10 >= F.greatest("n1", "n2") * 9)
-        .where((F.col("n1") + F.col("n2")) * 10 >= pu * 19)
-        .select("d1", "d2", "n1", "n2")
-    )
-    # r8 note (examined, deliberately left): an explicit width-pinned
-    # repartition on d1 before the token fan-out was tried and REVERTED on
-    # measurement — it demoted the token joins from broadcast to shuffle
-    # (stage CPU 19 s -> 60 s) and its wider partitioning leaked into the
-    # downstream label-propagation checkpoints (6 extra 66-task tiny stages
-    # per round). The 8-wide broadcast-probe shape is the better plan; the
-    # prefilter above attacks the candidate mass instead.
-    inter = (
-        pre.join(t1, "d1")
-        .join(t2, ["d2", "token"])
-        .groupBy("d1", "d2", "n1", "n2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    return (
-        inter.where(jac >= 0.9)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-    )
+    return _jaccard_edges(d, cand)
 
 
 _CLUSTER_EDGES_CTE = """tok AS (
@@ -899,27 +771,21 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     small by construction (the cap is component size, not corpus size), so
     the closure stays bounded.
 
-    Duplicate-mass cap (round-7; sf1 probe measured 26.5× for 10× data as
-    exact copies densified the length buckets — c copies in a bucket cost
-    c²/2 candidate pairs and a clique of propagation edges). The edge
-    builder now runs on ONE representative per (md5(text), lang, n_chars)
-    class — identical attributes ⇒ identical tokens, buckets and Jaccard —
-    and each member attaches to its representative by a STAR edge (an exact
-    J=1 pair in the original graph). A duplicate clique and its star have
-    the same connected components, and because every representative is its
-    group's MIN doc_id, the component-min labels are unchanged. Node set is
-    also unchanged: a doc had degree ≥ 1 iff it has a copy (m ≥ 2 group) or
-    its representative has a near-dup edge. Edge count drops from
-    O(copies²) to O(members + rep pairs)."""
-    docs, groups = _exact_dup_groups(table(spark, sf_dir, "documents"))
-    rep_edges = _near_dup_edges(spark, groups).select("d1", "d2")
-    rep_of = groups.select("h", "lang", "n_chars", F.col("doc_id").alias("rep"))
-    star = (
-        docs.join(rep_of, ["h", "lang", "n_chars"])
-        .where(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("d1"), F.col("doc_id").alias("d2"))
+    Runs on the exact-copy classes (_exact_dup_groups): an sf1 probe
+    measured 26.5× for 10× data as c copies in a bucket cost c²/2
+    candidate pairs and a clique of propagation edges. The edges are the
+    classes' near-dup edges plus a STAR edge from each representative to
+    each other member (an exact J=1 pair in the document graph). A
+    duplicate clique and its star have the same connected components, and
+    because every representative is its class's MIN doc_id, the
+    component-min labels are unchanged. The node set is unchanged too: a
+    doc has degree ≥ 1 iff it has a copy or its representative has a
+    near-dup edge."""
+    groups, mem = _text_classes(spark, sf_dir)
+    star = mem.where(F.col("doc_id") != F.col("rep")).select(
+        F.col("rep").alias("d1"), F.col("doc_id").alias("d2")
     )
-    return connected_components(rep_edges.unionAll(star))
+    return connected_components(_near_dup_edges(groups).select("d1", "d2").unionAll(star))
 
 
 def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
@@ -930,7 +796,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     own label and its neighbors' labels — and (b) a pointer-jump step —
     label(x) ← label(label(x)) — so the component minimum spreads along
     label chains exponentially: O(log diameter) rounds instead of
-    O(diameter) (r8, guide §2.4 — at sf0.1 the pure neighbor loop took 11
+    O(diameter) (guide §2.4 — at sf0.1 the pure neighbor loop took 11
     rounds of ~8 scheduler-bound stages each; with jumping it converges in
     4). Both steps only ever REPLACE a label with a smaller same-component
     label, and the loop exits on a no-change round, which in particular
@@ -1202,26 +1068,16 @@ def q_dedup_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds overlap. Built on the deterministic banded-MinHash candidates
     (q_dedup_minhash_exact) so the matrix is exact-oracled.
 
-    Scale shape — duplicate-mass cap (round-7, VERDICT r6 perf flag): the
-    banded chain is never all-pairs, but a bucket holding c exact copies of
-    the same boilerplate text still yields c²/2 candidate pairs — measured
-    17.8× wall-clock for 10× data at sf1 as duplicate mass densified, and a
-    real 100 TB corpus has mega-duplicated boilerplate. Fix: collapse exact
-    duplicates (md5(text), source) to ONE representative + multiplicity
-    BEFORE the pair machinery. Identical text ⇒ identical shingles ⇒
-    identical MinHash signature ⇒ identical buckets and est_jaccard, so the
-    matrix reconstructs EXACTLY from multiplicities: a rep pair (r1, r2)
-    stands for m1·m2 doc pairs, and a rep with m copies stands for
-    C(m, 2) within-group pairs (est_jaccard = 1 ≥ τ always). Candidate work
-    is now unique-text-sized — duplicate growth costs one integer per rep —
-    while the oracle still computes over raw documents and must agree
-    (pytest: tests/test_new_ops_worked.py multiplicity referent)."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    reps = docs.groupBy(F.md5("text").alias("h"), "source").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.min_by("text", "doc_id").alias("text"),
-        F.count(F.lit(1)).alias("m"),
-    )
+    Runs on the exact-copy classes of (md5(text), source)
+    (_exact_dup_groups): a bucket holding c copies of one boilerplate text
+    still yields c²/2 candidate pairs, measured 17.8× wall-clock for 10×
+    data at sf1. The matrix rebuilds from multiplicities, with no member
+    join: a class pair (r1, r2) stands for m1·m2 doc pairs, and a class
+    with m copies for C(m, 2) within-class pairs (est_jaccard = 1 ≥ τ).
+    Referents: tests/test_new_ops_worked.py (fixed fixture) and the
+    doc-level pair table in tests/test_duplicate_mass_stress.py."""
+    d = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    reps, _ = _exact_dup_groups(d.withColumn("h", F.md5("text")), "h", "source")
     rep_pairs = _mh_pairs_frame(_mh_signature_frame(spark, reps)).where(
         F.col("est_jaccard") >= _CONTAM_TAU
     )
@@ -1538,9 +1394,9 @@ def q_sim_setjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer parts-per-million (inter*1e6 div union) — no float appears
     anywhere in the operator.
 
-    Duplicate-mass cap (round-7, VERDICT r6 perf flag): exact duplicates
-    make ≥τ pairs grow as copies², and at sf1 the measured cost was 13.5×
-    for 10× data as boilerplate densified. The expensive stages (df count,
+    Duplicate-mass cap: exact duplicates make ≥τ pairs grow as copies²,
+    and at sf1 the measured cost was 13.5× for 10× data as boilerplate
+    densified. The expensive stages (df count,
     prefix window, candidate join, array intersection) now run on ONE
     REPRESENTATIVE per distinct (lang, token-set) — identical sets have
     identical n, prefixes and intersections, so the verified rep pairs
@@ -1598,10 +1454,9 @@ def q_sim_setjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d1", "d2", "n1", "n2")
         .distinct()
     )
-    # 256-bit-bitmask prune before the exact intersect (the #25 pattern;
-    # guide §3.2): at tau = 0.95 the prefix is only ~ceil(0.05n)+1 tokens
-    # and this corpus's "rare" tokens still collide across similar-length
-    # docs, so the candidate join is weakly selective — measured at sf0.1,
+    # 256-bit-bitmask prune before the exact intersect (guide §3.2): at
+    # tau = 0.95 the prefix is only ~ceil(0.05n)+1 tokens and this corpus's
+    # "rare" tokens still collide across similar-length docs, so the candidate join is weakly selective — measured at sf0.1,
     # 367,162 candidates of which only 1,646 (0.45%) pass the exact
     # verify. The c common tokens set at most pu := popcount(m1|m2) <=
     # |A∪B| bits, and J >= NUM/DEN ⟺ c·(NUM+DEN) >= NUM·(n1+n2), so
@@ -1609,26 +1464,11 @@ def q_sim_setjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are pruned and survivors take the unchanged exact intersect (the
     # losslessness test pins the result against the naive all-pairs join).
     masksd = toks.groupBy("doc_id").agg(*_token_mask_cols("t"))
-    mm1 = masksd.select(
-        F.col("doc_id").alias("d1"),
-        *[F.col(f"mk{w}").alias(f"a{w}") for w in range(4)],
-    )
-    mm2 = masksd.select(
-        F.col("doc_id").alias("d2"),
-        *[F.col(f"mk{w}").alias(f"b{w}") for w in range(4)],
-    )
-    pu = sum(
-        F.bit_count(F.col(f"a{w}").bitwiseOR(F.col(f"b{w}"))) for w in range(4)
-    )
-    cand = (
-        cand.join(mm1, "d1")
-        .join(mm2, "d2")
-        .where(
-            (F.col("n1") + F.col("n2")) * SSJ_TAU_DEN
-            >= pu * (SSJ_TAU_NUM + SSJ_TAU_DEN)
-        )
-        .select("d1", "d2", "n1", "n2")
-    )
+    cand = _mask_prefilter(
+        cand,
+        masksd,
+        lambda pu: (F.col("n1") + F.col("n2")) * SSJ_TAU_DEN >= pu * (SSJ_TAU_NUM + SSJ_TAU_DEN),
+    ).select("d1", "d2", "n1", "n2")
     x = dd.select(
         F.col("doc_id").alias("d1"), F.col("tset").alias("ts1"),
         F.col("gid").alias("gid1"),
@@ -1761,10 +1601,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     containee-keyed, never pair-materialized. All bounds are exact
     integers — no similarity floats anywhere.
 
-    Duplicate-mass cap (round-7; first-ever sf1 probe measured **58.6×**
-    for 10× data — the repo's worst densification: exact copies multiply
-    every rarest-token document frequency AND every copy trivially
-    contains every other copy). The probe/verify machinery now runs on
+    Duplicate-mass cap (the first sf1 probe measured **58.6×** for 10× data
+    — the repo's worst densification: exact copies multiply every
+    rarest-token document frequency AND every copy trivially contains
+    every other copy). The probe/verify machinery now runs on
     ONE representative per (lang, token-set) class; the per-doc output
     reconstructs exactly from group aggregates: a member of a
     multiplicity-m group is contained by its m−1 copies plus every
@@ -1803,7 +1643,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     groups = g1.join(g2, "gid").withColumn("n", F.size("ts").cast("long"))
     gtok = groups.select("gid", "lang", F.explode("ts").alias("t"))
-    # r8 (guide §1.2/§3.2): 256-bit token bitmask per group — bit
+    # 256-bit token bitmask per group (guide §1.2/§3.2) — bit
     # pmod(xxhash64(t), 256), packed into 4 longs. Sound non-containment
     # prefilter: if A has a token whose bit is NOT set in B's mask, that
     # token cannot be in B, so A ⊄ B — only true negatives are pruned and

@@ -40,11 +40,6 @@ def shuffle_stage_count(plan: str) -> int:
     )
 
 
-def pushed_filters(plan: str) -> list[str]:
-    """Every PushedFilters list that reached a file scan."""
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-
-
 def partition_filters(plan: str) -> list[str]:
     """Every PartitionFilters list (directory pruning) on a file scan."""
     return re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)

@@ -353,21 +353,28 @@ def test_ngram_matches_bruteforce_on_random_duplicates(spark, tmp_path, seed):
     assert any(0 < j < 1 for *_, j in got), "no cross-class pair fired"
 
 
-@pytest.mark.parametrize("seed", SEEDS)
-def test_near_sql_matches_bruteforce_on_random_duplicates(spark, tmp_path, seed):
-    """r9 rep-collapse + mask prefilter of q_dedup_near_sql (VERDICT r8 #4):
-    brute-force python token-set Jaccard over (lang, n_chars)-blocked pairs
-    at threshold 0.9 must equal the representative-collapsed +
-    member-expanded output. The corpus's alias doc (same token SET as
-    bases[0] in a different ORDER — different md5 class, jaccard exactly
-    1.0) and the one-token-replaced near-dup (J = 39/41) exercise the
-    cross-class expansion; exact-copy multiplicities exercise the
-    within-class jaccard=1.0 branch. The corpus's own near-dup swaps in a
-    4-char token ("zzzz" vs the pool's 3-char tokens), which the n_chars
-    block rightly excludes — so, as in the ngram test, two exact copies of
-    a SAME-length one-token-replaced variant of the 40-token text are
-    appended (J = 39/41 >= 0.9, same lang and n_chars by construction) so
-    the cross expansion provably fires under every seed."""
+@pytest.mark.parametrize(
+    "name,max_diff,seed",
+    [pytest.param("q_dedup_near_sql", 0, s, id=str(s)) for s in SEEDS]
+    + [pytest.param("q_dedup_near_bucketed", 32, s, id=f"bucketed-{s}") for s in SEEDS],
+)
+def test_near_sql_matches_bruteforce_on_random_duplicates(
+    spark, tmp_path, name, max_diff, seed
+):
+    """Rep-collapse + member expansion of the token-Jaccard near-dup
+    operators: brute-force python token-set Jaccard at threshold 0.9 over
+    same-lang pairs with |n_chars diff| <= max_diff (q_dedup_near_sql:
+    equal n_chars; q_dedup_near_bucketed: within 32) must equal the
+    operator's output. The corpus's alias doc (same token SET as bases[0]
+    in a different ORDER — different md5 class, jaccard exactly 1.0) and
+    the one-token-replaced near-dup (J = 39/41) exercise the cross-class
+    expansion; exact-copy multiplicities exercise the within-class
+    jaccard=1.0 branch. The corpus's own near-dup swaps in a 4-char token
+    ("zzzz" vs the pool's 3-char tokens), which the equal-n_chars block
+    rightly excludes — so, as in the ngram test, two exact copies of a SAME-length
+    one-token-replaced variant of the 40-token text are appended (J =
+    39/41 >= 0.9, same lang and n_chars by construction) so the cross
+    expansion provably fires under every seed."""
     sf = _random_duplicate_corpus(tmp_path, seed)
     docs = pd.read_parquet(f"{sf}/documents.parquet")
     rng = random.Random(seed + 1)
@@ -394,7 +401,7 @@ def test_near_sql_matches_bruteforce_on_random_duplicates(spark, tmp_path, seed)
 
     got = {
         (r.d1, r.d2, r.jaccard)
-        for r in QUERIES["q_dedup_near_sql"](spark, sf).collect()
+        for r in QUERIES[name](spark, sf).collect()
     }
     meta = {
         int(r.doc_id): (r.lang, len(r.text), frozenset(r.text.split()))
@@ -404,7 +411,7 @@ def test_near_sql_matches_bruteforce_on_random_duplicates(spark, tmp_path, seed)
     for (i, (li, ci, si)), (j, (lj, cj, sj)) in itertools.combinations(
         sorted(meta.items()), 2
     ):
-        if li != lj or ci != cj:
+        if li != lj or abs(ci - cj) > max_diff:
             continue
         inter, union = len(si & sj), len(si | sj)
         if inter * 10 >= union * 9:

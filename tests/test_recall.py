@@ -100,17 +100,42 @@ def test_mllib_minhash_lsh_recall(spark):
     assert recall >= 0.9, f"MLlib LSH recall {recall:.3f} < 0.9 ({len(truth)} true pairs)"
 
 
-def test_minhash_lsh_matches_mllib_approx_join(spark):
-    """The r8 explicit banded-join + bitmask-distance implementation of
+def _vocab64_corpus(tmp_path) -> str:
+    """documents.parquet whose lowercase tokens number exactly 64, the
+    widest vocabulary the bitmask distance takes (token 63 sets the sign
+    bit). Each of four 16-token blocks gives two 15-token texts sharing 14
+    tokens (Jaccard distance 0.125), each text in two exact copies."""
+    import pandas as pd
+
+    toks = [f"w{i:02d}" for i in range(64)]
+    texts = [" ".join(toks[b + s:b + s + 15]) for b in range(0, 64, 16) for s in (0, 1)]
+    rows = [t for t in texts for _ in range(2)]
+    pd.DataFrame(
+        {
+            "doc_id": range(1, len(rows) + 1),
+            "text": rows,
+            "lang": "en",
+            "source": "src0",
+            "n_chars": [len(t) for t in rows],
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "vocab64"])
+def test_minhash_lsh_matches_mllib_approx_join(spark, tmp_path, corpus):
+    """The explicit banded-join + bitmask-distance implementation of
     q_dedup_minhash_lsh must emit EXACTLY the rows the original MLlib
     approxSimilarityJoin formulation emits (same seeded fit/transform,
-    same rep-collapse + membership expansion). Guards both r8 changes:
-    the distinct-candidates-first banded join and the <=64-token bitmask
+    same rep-collapse + membership expansion). Guards the
+    distinct-candidates-first banded join and the <=64-token bitmask
     Jaccard (bit_count over vocabulary masks == array_intersect over
-    distinct-token sets)."""
+    distinct-token sets), on the fixture and on a vocabulary of exactly
+    64 tokens."""
     from pyspark.ml.feature import CountVectorizer, MinHashLSH, Tokenizer
 
-    d = table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    sf = SF_SMALL if corpus == "sf0.001" else _vocab64_corpus(tmp_path)
+    d = table(spark, sf, "documents").select("doc_id", "text")
     g = d.groupBy("text").agg(
         F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("m")
     )
@@ -120,6 +145,7 @@ def test_minhash_lsh_matches_mllib_approx_join(spark):
     model = CountVectorizer(
         inputCol="tokens", outputCol="features", binary=True, minDF=1.0
     ).fit(toks)
+    assert corpus != "vocab64" or len(model.vocabulary) == 64
     vecs = model.transform(toks).select("doc_id", "features")
     lsh_model = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=8, seed=42
@@ -152,7 +178,8 @@ def test_minhash_lsh_matches_mllib_approx_join(spark):
         .select("d1", "d2", F.lit(0.0).alias("jaccard_dist"))
     )
     ref = {tuple(r) for r in cross.unionAll(within).collect()}
-    got = {tuple(r) for r in _queries()["q_dedup_minhash_lsh"](spark, SF_SMALL).collect()}
+    got = {tuple(r) for r in _queries()["q_dedup_minhash_lsh"](spark, sf).collect()}
+    assert corpus != "vocab64" or any(r[2] > 0 for r in ref), "no cross-class pair"
     assert ref and got == ref, (
         f"banded/bitmask path diverged from approxSimilarityJoin: "
         f"{len(got - ref)} extra, {len(ref - got)} missing of {len(ref)}"
