@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
 
@@ -167,9 +167,6 @@ def vacuum_plan(path: str, retain_from_version: int) -> list[str]:
 # --------------------------------------------------------------------------
 # M102: time travel over the versioned table
 # --------------------------------------------------------------------------
-
-# Same .tmp root as sinks.TMP_DIR (kept local for registration-order reasons)
-TMP_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 
 @query(

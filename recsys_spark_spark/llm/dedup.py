@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo, spread, table
+from recsys_spark_spark.catalog import memo, spread, state_partitions, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.llm.similarity import _scaled_dot
 from recsys_spark_spark.registry import query
@@ -804,8 +804,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     condition of the original algorithm, so the result is byte-identical.
 
     Checkpointed state (sym, per-round labels) is coalesced to a
-    byte-derived partition budget (the graph family's _state_partitions:
-    64 MB per partition, 1 locally, ~320 for a 20 GB edge set) — the
+    byte-derived partition budget (catalog.state_partitions: 64 MB per
+    partition, 1 locally, ~320 for a 20 GB edge set) — the
     KB-sized label frame otherwise re-materializes on the session's full
     shuffle width every round, paying dozens of task launches for
     microseconds of work. The changed-count rides the checkpointed frame
@@ -815,14 +815,12 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     silently-wrong labels. Property-tested against a union-find reference
     in tests/test_cf_property.py.
     """
-    from recsys_spark_spark.operators.analytics import _state_partitions
-
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     sym = edges.union(
         edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
     ).localCheckpoint()
-    p = _state_partitions(sym.count(), row_bytes=16)
+    p = state_partitions(sym.count(), row_bytes=16)
     sym = sym.coalesce(p).localCheckpoint()
     # nodes that appear in at least one dup pair; singletons are not clusters
     labels = (

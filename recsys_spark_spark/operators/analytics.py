@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo, table
+from recsys_spark_spark.catalog import memo, state_partitions, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
 
@@ -2247,21 +2247,6 @@ FROM lab
 """
 
 
-def _state_partitions(n_rows: int, row_bytes: int = 24) -> int:
-    """Partition budget for checkpointed iterative state (r8, guide §2.2/§6):
-    size partitions by BYTES (AQE's 64 MB advisory), because the session's
-    default coalescing keeps parallelism first — a 0.3 MB contracted edge
-    set otherwise re-materializes on 32-64 partitions every round, and each
-    of the ~6 exchanges per round then pays 32-64 task launches for
-    microseconds of work (measured: 64-task stages at 11-23 s wall with
-    <5 s executor CPU across 8 star rounds / 3 BFS hops at sf0.1).
-    Scale-adaptive by construction: a cluster-sized edge set (say 20 GB)
-    gets ~320 partitions, the catalog-sized local one gets 1."""
-    import math
-
-    return max(1, math.ceil(n_rows * row_bytes / (64 << 20)))
-
-
 def star_contract(e: DataFrame, rounds: int) -> DataFrame:
     """Run `rounds` alternating large-star/small-star rounds over a
     canonical (a > b) edge DataFrame; returns the contracted edge set
@@ -2282,8 +2267,8 @@ def star_contract(e: DataFrame, rounds: int) -> DataFrame:
     # Partition budget from the INPUT edge count (contraction only shrinks
     # the within-round state up to constant factors): every checkpointed
     # round re-materializes on this many partitions instead of the session
-    # shuffle width — see _state_partitions.
-    p = _state_partitions(e.count())
+    # shuffle width — see catalog.state_partitions.
+    p = state_partitions(e.count())
     for _ in range(rounds):
         nbr = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
             e.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -2466,8 +2451,8 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8: byte-derived partition budget for the catalog-sized BFS state —
     # und/frontier/visited otherwise iterate on 32-64 partition checkpoints
     # (measured: three 64-task hop stages, 74-141 s wall, <9 s executor CPU
-    # — pure task-launch overhead). See _state_partitions.
-    p = _state_partitions(e0.count(), row_bytes=16)
+    # — pure task-launch overhead). See catalog.state_partitions.
+    p = state_partitions(e0.count(), row_bytes=16)
     und = (
         e0.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(e0.select(F.col("b").alias("u"), F.col("a").alias("v")))

@@ -18,9 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.functions.determinism import rlong
-from recsys_spark_spark.operators.scans import TMP_DIR
 from recsys_spark_spark.registry import query
 
 

@@ -14,11 +14,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
-
-TMP_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
 
 
 @query(

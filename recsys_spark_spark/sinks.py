@@ -27,13 +27,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.registry import query
-
-# Same .tmp root as operators.scans.TMP_DIR — defined locally (not imported)
-# so importing this module does not pull operators.scans in first and push
-# its queries ahead of these in the driver's registration-order window.
-TMP_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 
 def upsert_parquet(spark: SparkSession, target_dir: str, updates: DataFrame, key: str) -> None:

@@ -1,16 +1,38 @@
-"""Local replica of the driver's correctness gate.
+"""The oracle sweep: every registered query against its DuckDB oracle,
+under the conditions of an external caller of ``__spark_entry__``.
 
-Runs every registered query on Spark and its oracle on DuckDB over the same
-parquet, then compares row count, column names/types, and the full
-order-insensitive multiset of values (exact — stricter than any hash).
+Conditions, all set up in ``main()`` (importing this module for
+``compare`` or ``duck_connection`` starts nothing and changes nothing):
+
+- the process time zone is America/New_York (non-UTC, with DST), set
+  before the JVM starts by re-executing the interpreter;
+- ``__spark_entry__`` is imported cold in this process, and its
+  ``queries()`` run in registration order;
+- the session is ``SparkSession.builder.master("local[*]").getOrCreate()``
+  with Spark's default confs (200 shuffle partitions, no time-zone pin).
+
+Per key: ``clearCache()``, build the frame, ``toPandas()``. A key with an
+oracle must match it exactly (``oracle_type_problems`` + ``compare``:
+columns, row count, the order-insensitive multiset of values and the bit
+patterns of every float); a rows-only key must run. Then ``clearCache()``
+again, and the RDD ids in ``getPersistentRDDs()`` that were not there
+before the key ran are recorded: the state the reset did not release.
+
+Each key appends one JSON line to ``--out`` as soon as it finishes::
+
+    {"key", "sf", "mode": "oracle" | "rows-only", "ok", "rows",
+     "oracle_rows", "problem", "persisted_after_reset", "sec"}
+
+``problem`` is the first problem found (null when ``ok``), ``sec`` the
+key's wall time. A run skips every key that already has a row in
+``--out``, so a killed sweep resumes where it stopped. A failure that
+leaves the SparkContext stopped writes no row for its key and exits 2, so
+the next run starts at that key. The summary names every registered key
+that has no row. Exit 0 only when every requested key (all keys if none
+are named) has a row and it is ok.
 
 Usage:
-    python tools/check_oracles.py [--sf /root/testdata/sf0.01] [--json out.json] [name ...]
-
---json writes a driver-CORRECTNESS-shaped report (rows_match / schema_match /
-hash_match per query, "no_oracle" for rows-only queries) so each round's full
-local sweep can be committed as CORRECTNESS_LOCAL_r{N}.json alongside the
-driver's capped CORRECTNESS_r{N}.json.
+    python tools/check_oracles.py --sf DATA_DIR --out SWEEP.jsonl [name ...]
 """
 
 from __future__ import annotations
@@ -29,8 +51,8 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from recsys_spark_spark.catalog import TABLES  # noqa: E402
-from recsys_spark_spark.registry import load_all  # noqa: E402
-from recsys_spark_spark.session import get_spark  # noqa: E402
+
+SWEEP_TZ = "America/New_York"
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -153,10 +175,7 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
         problems.extend(bit_problems(s, d))
         for c in s.columns:
             sv, dv = s[c], d[c]
-            if pd.api.types.is_float_dtype(sv):
-                eq = (sv.isna() & dv.isna()) | (sv == dv)
-            else:
-                eq = (sv.isna() & dv.isna()) | (sv == dv)
+            eq = (sv.isna() & dv.isna()) | (sv == dv)
             bad = int((~eq.fillna(False)).sum())
             if bad:
                 idx = (~eq.fillna(False)).idxmax()
@@ -169,95 +188,113 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def _stopped(spark) -> bool:
+    try:
+        return spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # the JVM or its gateway is gone
+        return True
+
+
+def _persistent_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _read_rows(path: str) -> dict[str, dict]:
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return {r["key"]: r for r in map(json.loads, filter(str.strip, f))}
+
+
+def run_key(spark, con, sf: str, name: str, build, oracle: str | None) -> dict | None:
+    """One key under the sweep's protocol; None if the SparkContext died."""
+    t0 = time.time()
+    spark.catalog.clearCache()
+    before = _persistent_ids(spark)
+    row = {"key": name, "sf": os.path.basename(sf.rstrip("/")),
+           "mode": "rows-only" if oracle is None else "oracle", "ok": False,
+           "rows": None, "oracle_rows": None, "problem": None}
+    try:
+        sdf = build(spark, sf).toPandas()
+    except Exception as e:
+        traceback.print_exc()
+        if _stopped(spark):
+            return None
+        sdf = None
+        row["problem"] = f"spark raised {type(e).__name__}: {str(e).strip()[:300]}"
+    if sdf is not None:
+        row["rows"] = len(sdf)
+        problems: list[str] = []
+        if oracle is not None:
+            try:
+                ddf = con.execute(oracle).fetchdf()
+            except duckdb.Error as e:
+                problems = [f"oracle raised {type(e).__name__}: {str(e).strip()[:300]}"]
+            else:
+                row["oracle_rows"] = len(ddf)
+                problems = oracle_type_problems(con, oracle) + compare(name, sdf, ddf)
+        row["ok"] = not problems
+        row["problem"] = problems[0] if problems else None
+    spark.catalog.clearCache()
+    row["persisted_after_reset"] = sorted(_persistent_ids(spark) - before)
+    row["sec"] = round(time.time() - t0, 2)
+    return row
+
+
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--json", dest="json_out", default=None)
-    ap.add_argument(
-        "--verify-sweep",
-        dest="verify_sweep",
-        default=None,
-        metavar="SWEEP_JSON",
-        help="no queries run: exit 1 unless SWEEP_JSON covers every "
-        "registered query (the r5 snapshot shipped a sweep 12 keys behind "
-        "HEAD — run this against the committed CORRECTNESS_LOCAL file "
-        "before every end-of-round snapshot)",
-    )
-    ap.add_argument("names", nargs="*")
+    ap = argparse.ArgumentParser(description="Oracle sweep; see the module docstring.")
+    ap.add_argument("--sf", required=True, help="data directory, one <table>.parquet per table")
+    ap.add_argument("--out", required=True, help="JSONL file: one row per key, appended")
+    ap.add_argument("names", nargs="*", help="keys to run (default: all registered)")
     args = ap.parse_args()
-    if args.verify_sweep:
-        queries, _ = load_all()
-        with open(args.verify_sweep) as f:
-            swept = set(json.load(f))
-        missing = sorted(set(queries) - swept)
-        extra = sorted(swept - set(queries))
-        if missing or extra:
-            print(f"SWEEP INCOMPLETE vs registry ({len(queries)} keys):")
-            if missing:
-                print(f"  not in sweep ({len(missing)}): {missing}")
-            if extra:
-                print(f"  swept but unregistered ({len(extra)}): {extra}")
-            return 1
-        print(f"sweep covers all {len(queries)} registry keys")
-        return 0
-    if not os.path.isdir(args.sf):  # accept the "sf0.01" shorthand
-        args.sf = os.path.join("/root/testdata", args.sf)
 
-    queries, oracles = load_all()
-    names = args.names or sorted(queries)
-    spark = get_spark(shuffle_partitions=8)
-    con = duck_connection(args.sf)
+    if os.environ.get("TZ") != SWEEP_TZ:  # the JVM reads TZ once, at start
+        os.environ["TZ"] = SWEEP_TZ
+        os.execv(sys.executable, [sys.executable, *sys.argv])
+    time.tzset()
 
-    failures = 0
-    report: dict[str, dict] = {}
-    for name in names:
-        if name not in queries:
-            print(f"FAIL {name}: not registered")
-            failures += 1
-            report[name] = {"rows_match": False, "schema_match": False, "hash_match": False,
-                            "spark_rows": None, "oracle_rows": None, "err": "not_registered"}
-            continue
-        t0 = time.time()
-        try:
-            sdf = queries[name](spark, args.sf).toPandas()
-        except Exception:
-            print(f"FAIL {name}: spark raised\n{traceback.format_exc()}")
-            failures += 1
-            report[name] = {"rows_match": False, "schema_match": False, "hash_match": False,
-                            "spark_rows": None, "oracle_rows": None, "err": "spark_raised"}
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows) [{time.time()-t0:.1f}s]")
-            report[name] = {"rows_match": None, "schema_match": None, "hash_match": None,
-                            "spark_rows": len(sdf), "oracle_rows": None, "err": "no_oracle"}
-            continue
-        try:
-            ddf = con.execute(oracles[name]).fetchdf()
-        except Exception:
-            print(f"FAIL {name}: oracle raised\n{traceback.format_exc()}")
-            failures += 1
-            report[name] = {"rows_match": False, "schema_match": False, "hash_match": False,
-                            "spark_rows": len(sdf), "oracle_rows": None, "err": "oracle_raised"}
-            continue
-        problems = oracle_type_problems(con, oracles[name]) + compare(name, sdf, ddf)
-        schema_ok = not any(p.startswith("columns differ") for p in problems)
-        rows_ok = len(sdf) == len(ddf)
-        report[name] = {"rows_match": rows_ok, "schema_match": schema_ok,
-                        "hash_match": not problems, "spark_rows": len(sdf),
-                        "oracle_rows": len(ddf), "err": problems[0] if problems else None}
-        if problems:
-            failures += 1
-            print(f"FAIL {name} [{time.time()-t0:.1f}s]")
-            for p in problems:
-                print(f"     {p}")
-        else:
-            print(f"ok   {name}: {len(sdf)} rows match [{time.time()-t0:.1f}s]")
-    print(f"\n{len(names) - failures}/{len(names)} passed")
-    if args.json_out:
-        with open(args.json_out, "w") as f:
-            json.dump(report, f, indent=2)
-        print(f"report written to {args.json_out}")
-    return 1 if failures else 0
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__ as entry
+
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"not registered: {unknown}")
+    wanted = [n for n in queries if not args.names or n in args.names]
+    done = _read_rows(args.out)
+    todo = [n for n in wanted if n not in done]
+    print(f"{len(wanted) - len(todo)} of {len(wanted)} keys already in {args.out}", flush=True)
+
+    status = 0
+    if todo:
+        con = duck_connection(args.sf)
+        spark = SparkSession.builder.master("local[*]").getOrCreate()
+        for name in todo:
+            row = run_key(spark, con, args.sf, name, queries[name], oracles.get(name))
+            if row is None:
+                print(f"STOP {name}: the SparkContext is stopped; no row written", flush=True)
+                status = 2
+                break
+            with open(args.out, "a") as f:
+                f.write(json.dumps(row) + "\n")
+            leak = f" persisted_after_reset={len(row['persisted_after_reset'])}" if row["persisted_after_reset"] else ""
+            print(f"{'ok  ' if row['ok'] else 'FAIL'} {name} [{row['mode']}, {row['rows']} rows, "
+                  f"{row['sec']}s]{leak}" + (f" -- {row['problem']}" if row["problem"] else ""), flush=True)
+
+    rows = _read_rows(args.out)
+    failed = [n for n in wanted if n in rows and not rows[n]["ok"]]
+    print(f"\n{sum(1 for n in wanted if n in rows) - len(failed)}/{len(wanted)} requested keys ok"
+          + (f"; failed: {failed}" if failed else ""))
+    missing = [n for n in queries if n not in rows]
+    if missing:
+        print(f"{len(missing)} of {len(queries)} registered keys have no row: {missing}")
+    extra = sorted(set(rows) - set(queries))
+    if extra:
+        print(f"rows for unregistered keys: {extra}")
+    if status == 0 and (failed or any(n not in rows for n in wanted)):
+        status = 1
+    return status
 
 
 if __name__ == "__main__":
