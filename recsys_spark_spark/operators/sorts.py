@@ -180,6 +180,8 @@ def value_buckets(
     nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pcts = [i / nb for i in range(1, nb)]
     v = F.col(value_col)
+    if not pcts:  # percentile_approx(v, []) is NULL: one bucket, no bounds
+        return df.withColumn("_bkt", F.when(v.isNull(), F.lit(nb)).otherwise(F.lit(0)))
     bounds = df.agg(F.percentile_approx(value_col, pcts, 10_000).alias("_bounds"))
     in_front = (lambda b: b > v) if descending else (lambda b: b < v)
     return (

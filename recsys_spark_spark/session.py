@@ -1,7 +1,8 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with defaults sized to the host.
 
-Local test/bench sessions keep shuffle.partitions low (local-mode overhead
-dominates at sf<=0.1); on a real cluster the same code runs with the
+The shuffle width defaults to the session's core count
+(``defaultParallelism`` of ``local[cpus]``) and the driver heap to half the
+host's memory; on a real cluster the same code runs with the
 cluster-provided session — query code never assumes a specific parallelism.
 """
 
@@ -12,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default driver heap: half of the host's MemTotal in whole GiB, at
+    least 1g. All task threads of ``local[cpus]`` share this one heap, and
+    G1 grows a heap toward its cap before collecting hard, so a cap above
+    the host's memory gets the JVM killed by the kernel instead."""
+    with open(meminfo) as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(1, kib // (2 << 20))}g"
+
+
 def get_spark(
     app_name: str = "recsys_spark_spark",
     cpus: str | int | None = None,
@@ -19,7 +30,6 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -28,7 +38,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(sp))
         # Arrow for all Python<->JVM data transfer (toPandas, pandas_udf).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
@@ -37,10 +46,7 @@ def get_spark(
         # read as raw longs (catalog._load truncates to µs). Session-level so
         # the per-table loader never mutates a running session's conf.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local[32] runs all 32 task threads in the driver JVM; an undersized
-        # heap turns the CF pair aggregates (tens of millions of transient
-        # structs per run) into multi-second full-GC pauses.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or driver_memory())
         # Whole-stage codegen emits fresh classes per query; the JVM default
         # 240 MB reserved code cache fills after a few dozen stages, silently
         # dropping hot loops back to the interpreter (observed 3-4x CPU
@@ -64,6 +70,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # One shuffle task per core: a wider default splits the persisted CF
+    # interaction matrix, and every stage that reads it, into tasks that
+    # queue behind each other for no extra parallelism. A runtime conf, so
+    # it is set once the core count `local[*]` resolves to is known.
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
     # getOrCreate() returns any PRE-EXISTING session, silently ignoring every
     # builder conf above for STATIC/core confs — a probe that expected an 8g
     # maxResultSize could be running with the 1g default (ADVICE r7). Static

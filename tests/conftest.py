@@ -11,11 +11,6 @@ from recsys_spark_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# get_spark's default 48g heap lets G1 grow the heap past a 16 GB host's
-# memory (the suite's live data stays under 4 GB after GC) until the kernel
-# kills the JVM mid-suite; 8g leaves room for the rest of the process.
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
-
 
 @pytest.fixture(scope="session")
 def spark():

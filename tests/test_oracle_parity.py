@@ -2,7 +2,8 @@
 
 Every registered query with a SQL oracle is compared against DuckDB on the
 same parquet: row count, column names, exact order-insensitive values.
-Run `python tools/check_oracles.py` for the sf0.01 (driver-scale) version.
+For the sf0.01 (driver-scale) version run
+`python tools/check_oracles.py --sf <sf0.01 data dir> --out sweep.jsonl`.
 """
 
 from __future__ import annotations

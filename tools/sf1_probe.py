@@ -224,7 +224,6 @@ def main() -> int:
     # full results on the driver; production sinks write distributed).
     spark = get_spark(
         app_name="sf1-probe",
-        shuffle_partitions=32,
         extra_conf={"spark.driver.maxResultSize": "8g"},
     )
     t0 = time.time()

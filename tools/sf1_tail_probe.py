@@ -70,7 +70,6 @@ def main() -> None:
     queries, _ = load_all()
     spark = get_spark(
         app_name="sf1-tail-probe",
-        shuffle_partitions=32,
         extra_conf={"spark.driver.maxResultSize": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
