@@ -7,19 +7,23 @@ file-level add/remove actions over immutable parquet data files — small
 enough to audit, real enough that every reader semantic (snapshot
 isolation, time travel, vacuum planning) falls out of it:
 
-- ``<table>/_log/<version>.json`` — one JSON commit per version, listing
-  relative data-file paths added and removed plus the operation name.
-  Commits are atomic via write-to-temp + ``os.rename`` (POSIX atomic within
-  a filesystem) — the same single-writer optimistic protocol Delta uses
-  against a filesystem without a coordination service; concurrent writers
-  would need a lock service, exactly as documented for Delta on S3.
+- ``<table>/_log/<version>.json`` — one JSON commit per version:
+  ``{"version", "op", "add", "remove", "schema"}``, the relative data-file
+  paths added and removed, the operation name and the table schema
+  (``df.schema.json()``, as Delta's ``metaData`` action records it).
+  Commits are atomic: the entry is written to a temp file and published
+  with ``os.link``, which fails with ``FileExistsError`` if the version
+  already exists (POSIX, within a filesystem), so a writer that loses the
+  race is refused and never overwrites the winner — the optimistic protocol
+  Delta uses against a filesystem without a coordination service.
 - ``<table>/data/…parquet`` — immutable data files written by Spark,
   partition-parallel. A new version never rewrites a live file in place;
   logical delete/update = remove old files + add rewritten ones.
-- A reader at version v = ``spark.read.parquet(*live files at v)`` where
-  live(v) folds the add/remove sets of commits 0..v — snapshot reads never
-  see a half-committed version, and ANY historical version stays readable
-  until vacuumed (time travel).
+- A reader at version v = ``spark.read.schema(schema at v).parquet(*live
+  files at v)`` where live(v) folds the add/remove sets of commits 0..v and
+  the schema is the one commit v records — snapshot reads never see a
+  half-committed version, never run a footer-inference job, and ANY
+  historical version stays readable until vacuumed (time travel).
 - ``vacuum_plan(v)`` = files removed by some commit ≤ latest and not live
   at any version ≥ v — the deletion work-list with retention, computed
   from the log alone.
@@ -38,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.functions.determinism import rlong
@@ -76,48 +81,58 @@ def _write_data(df: DataFrame, path: str) -> list[str]:
     )
 
 
-def _commit(path: str, op: str, add: list[str], remove: list[str]) -> int:
-    """Atomically append the next commit: tmp file + rename. Fails (rename
-    onto existing) rather than corrupts if a concurrent writer raced."""
-    version = (_versions(path)[-1] + 1) if _versions(path) else 0
+def _commit(
+    path: str, op: str, add: list[str], remove: list[str], schema: str | None = None
+) -> int:
+    """Atomically append the next commit: tmp file + ``os.link``, which
+    refuses (rather than replaces) a version another writer committed first."""
+    versions = _versions(path)
+    version = versions[-1] + 1 if versions else 0
     os.makedirs(_log_dir(path), exist_ok=True)
-    entry = {"version": version, "op": op, "add": add, "remove": remove}
+    entry = {"version": version, "op": op, "add": add, "remove": remove, "schema": schema}
     tmp = os.path.join(_log_dir(path), f".{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
         json.dump(entry, f)
-    final = os.path.join(_log_dir(path), f"{version:05d}.json")
-    if os.path.exists(final):  # lost the race: another writer committed
+    try:
+        os.link(tmp, os.path.join(_log_dir(path), f"{version:05d}.json"))
+    except FileExistsError:  # lost the race: another writer committed
+        raise RuntimeError(f"concurrent commit at version {version}") from None
+    finally:
         os.unlink(tmp)
-        raise RuntimeError(f"concurrent commit at version {version}")
-    os.rename(tmp, final)
     return version
 
 
-def live_files(path: str, version: int | None = None) -> list[str]:
+def _snapshot(path: str, version: int | None) -> tuple[list[str], str | None]:
     """Fold the commit log up to `version` (latest if None) into the live
-    file set — the reader's snapshot."""
+    file set and the schema that commit records — the reader's snapshot."""
     versions = _versions(path)
     if not versions:
         raise FileNotFoundError(f"no table log at {path}")
     if version is None:
         version = versions[-1]
     live: set[str] = set()
+    schema = None
     for v in versions:
         if v > version:
             break
         c = _read_commit(path, v)
         live -= set(c["remove"])
         live |= set(c["add"])
-    return sorted(live)
+        schema = c.get("schema")
+    return sorted(live), schema
+
+
+def live_files(path: str, version: int | None = None) -> list[str]:
+    return _snapshot(path, version)[0]
 
 
 def create_table(df: DataFrame, path: str) -> int:
     shutil.rmtree(path, ignore_errors=True)
-    return _commit(path, "create", _write_data(df, path), [])
+    return _commit(path, "create", _write_data(df, path), [], df.schema.json())
 
 
 def append_table(df: DataFrame, path: str) -> int:
-    return _commit(path, "append", _write_data(df, path), [])
+    return _commit(path, "append", _write_data(df, path), [], df.schema.json())
 
 
 def overwrite_where(
@@ -139,14 +154,21 @@ def overwrite_where(
         "overwrite_where",
         _write_data(merged, path),
         live_files(path),
+        merged.schema.json(),
     )
 
 
 def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    files = [os.path.join(path, f) for f in live_files(path, version)]
-    return spark.read.parquet(*files)
+    """The table at `version` (latest if None), read with the schema its log
+    records: no footer-inference job runs."""
+    files, schema = _snapshot(path, version)
+    if schema is None:
+        raise ValueError(f"commit log at {path} records no schema for version {version}")
+    return spark.read.schema(StructType.fromJson(json.loads(schema))).parquet(
+        *(os.path.join(path, f) for f in files)
+    )
 
 
 def vacuum_plan(path: str, retain_from_version: int) -> list[str]:
@@ -278,7 +300,10 @@ def q_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay only the merged-footer resolution. mergeSchema=true on the read
     is the explicit opt-in (schema inference across millions of footers
     is a listing cost — a real deployment records the merged schema in
-    the catalog instead; the read here models that resolution)."""
+    the catalog instead; the read here models that resolution). It is the
+    engine's one deliberate footer inference over files it wrote itself:
+    every other read-back passes the written schema (sinks.write_back,
+    read_version), and tests/test_readback.py pins that."""
     path = os.path.join(TMP_DIR, "evo_table")
     shutil.rmtree(path, ignore_errors=True)
     o = table(spark, sf_dir, "orders")

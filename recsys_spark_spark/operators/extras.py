@@ -451,12 +451,12 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats = [(src, os.path.getmtime(src), os.path.getsize(src))]
     fp = hashlib.md5(f"{sf_dir}:{stats}".encode()).hexdigest()[:12]
     out = os.path.join(TMP_DIR, f"dpp_fact_{fp}")
+    fact_src = table(spark, sf_dir, "orders").withColumn(
+        "o_year", F.year("o_orderdate").cast("int")
+    )
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        fact_src = table(spark, sf_dir, "orders").withColumn(
-            "o_year", F.year("o_orderdate").cast("int")
-        )
         fact_src.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    fact = spark.read.parquet(out)
+    fact = spark.read.schema(fact_src.schema).parquet(out)
     dim = (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
+from recsys_spark_spark.sinks import write_back
 
 
 @query(
@@ -112,11 +113,8 @@ def q_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partitioning by a low-cardinality column is the 100 TB layout: writers are
     parallel per partition, readers prune by it.
     """
-    out = os.path.join(TMP_DIR, "sink")
-    shutil.rmtree(out, ignore_errors=True)
     cust = table(spark, sf_dir, "customer")
-    cust.write.mode("overwrite").partitionBy("c_mktsegment").parquet(out)
-    back = spark.read.parquet(out)
+    back = write_back(cust, os.path.join(TMP_DIR, "sink"), "c_mktsegment")
     return back.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -31,21 +31,32 @@ from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.registry import query
 
 
-def upsert_parquet(spark: SparkSession, target_dir: str, updates: DataFrame, key: str) -> None:
-    """MERGE-shaped keyed upsert into a parquet target: rows in `updates`
-    replace target rows with the same key; unmatched target rows survive.
+def write_back(df: DataFrame, path: str, *partition_by: str) -> DataFrame:
+    """Write `df` as parquet to ``<path>.staging``, swap it in for `path`
+    (the file-lake commit; `df` may itself read `path`) and return the
+    read-back handle, read with the written schema so no footer-inference
+    job runs. Spark's file source still makes every field nullable and puts
+    partition columns last, as an inferring read does."""
+    staging = path + ".staging"
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(staging, path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def upsert_parquet(spark: SparkSession, target_dir: str, updates: DataFrame, key: str) -> DataFrame:
+    """MERGE-shaped keyed upsert into a parquet target whose stored columns
+    have the `updates` types (the target is read with `updates.schema`, not
+    inferred): rows in `updates` replace target rows with the same key;
+    unmatched target rows survive. Returns the merged table.
 
     Written as target-anti-join ∪ updates — one co-partitionable anti-join,
-    no row-at-a-time path. The rewrite goes to a staging dir then swaps,
-    which is the file-lake stand-in for a transactional commit (a real
-    deployment uses an ACID table format or the DB's native upsert).
+    no row-at-a-time path — and committed by write_back's staging swap (a
+    real deployment uses an ACID table format or the DB's native upsert).
     """
-    staging = target_dir + ".staging"
-    current = spark.read.parquet(target_dir)
+    current = spark.read.schema(updates.schema).parquet(target_dir)
     merged = current.join(updates, [key], "left_anti").unionByName(updates)
-    merged.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(target_dir, ignore_errors=True)
-    os.rename(staging, target_dir)
+    return write_back(merged, target_dir)
 
 
 @query(
@@ -63,7 +74,6 @@ def q_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, upsert every second customer with +100 balance, read the merged
     state back. The oracle states the final table closed-form."""
     out = os.path.join(TMP_DIR, "upsert_target")
-    shutil.rmtree(out, ignore_errors=True)
     cust = table(spark, sf_dir, "customer")
     seed = cust.where(F.col("c_custkey") % 3 == 0).select(
         F.col("c_custkey").alias("custkey"), F.col("c_acctbal").alias("acctbal")
@@ -73,8 +83,7 @@ def q_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("custkey"),
         (F.col("c_acctbal") + 100).alias("acctbal"),
     )
-    upsert_parquet(spark, out, updates, "custkey")
-    return spark.read.parquet(out)
+    return upsert_parquet(spark, out, updates, "custkey")
 
 
 @query(
@@ -97,14 +106,11 @@ def q_sink_kv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader consumes per partition (reference pushes CF results to Redis)."""
     from recsys_spark_spark.cf.itemcf import interactions, item_norms
 
-    out = os.path.join(TMP_DIR, "kv_export")
-    shutil.rmtree(out, ignore_errors=True)
     kv = item_norms(interactions(spark, sf_dir)).select(
         F.concat(F.lit("item:"), F.col("item_id").cast("string")).alias("k"),
         F.col("n_users").cast("string").alias("v"),
     )
-    kv.write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return write_back(kv, os.path.join(TMP_DIR, "kv_export"))
 
 
 @query(
@@ -158,10 +164,8 @@ def q_source_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-SF target (a shared dir would serve stale data when the same
     # session or a later one runs at a different scale factor)
     out = os.path.join(TMP_DIR, f"events_by_type_{os.path.basename(sf_dir.rstrip('/'))}")
-    table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(out)
-    back = spark.read.parquet(out).where(F.col("event_type") == "error")
+    back = write_back(table(spark, sf_dir, "events"), out, "event_type")
+    back = back.where(F.col("event_type") == "error")
     return back.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum(rlong(F.col("value") * F.lit(1e6))) / F.lit(1e6)).alias("sum_value"),
@@ -308,7 +312,7 @@ def merge_into(
 
     This is what Delta/Iceberg MERGE compiles to under the hood (join +
     rewrite); with no ACID table format in this container the transactional
-    commit is the staging-swap from upsert_parquet, and THIS function is the
+    commit is write_back's staging swap, and THIS function is the
     engine work that would be identical on either. Columns named in
     matched_update / insert_values are expressions over the joined row; the
     target's other rows pass through untouched. One shuffle per side (both
@@ -377,14 +381,12 @@ def q_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recsys_spark_spark.functions.determinism import rlong
 
     out = os.path.join(TMP_DIR, "merge_target")
-    shutil.rmtree(out, ignore_errors=True)
     cust = table(spark, sf_dir, "customer")
     target = cust.where(F.col("c_custkey") % 2 == 0).select(
         F.col("c_custkey").alias("custkey"),
         rlong(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
         F.lit(0).cast("long").alias("n_orders"),
     )
-    target.write.mode("overwrite").parquet(out)
     o = table(spark, sf_dir, "orders")
     source = (
         o.where(F.year("o_orderdate") == 1995)
@@ -395,7 +397,7 @@ def q_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     merged = merge_into(
-        spark.read.parquet(out),
+        write_back(target, out),
         source,
         key="custkey",
         matched_delete=F.col("s.n") > MERGE_PURGE_N,
@@ -405,8 +407,4 @@ def q_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         insert_values={"bal_cents": F.col("s.cents"), "n_orders": F.col("s.n")},
     )
-    staging = out + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(out, ignore_errors=True)
-    os.rename(staging, out)
-    return spark.read.parquet(out)
+    return write_back(merged, out)

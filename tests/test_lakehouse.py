@@ -84,3 +84,21 @@ def test_commit_race_is_refused(spark, monkeypatch):
         lh._commit(TBL, "append", ["data/x.parquet"], [])
     # and no temp debris is left behind
     assert not [f for f in os.listdir(lh._log_dir(TBL)) if f.endswith(".tmp")]
+
+
+def test_commit_never_overwrites_a_published_version(monkeypatch, tmp_path):
+    # the other writer publishes version 1 between this writer's log listing
+    # and its publish, and no existence check sees it: the publish itself
+    # must refuse, leaving the winner's commit byte-for-byte intact
+    tbl = str(tmp_path / "tbl")
+    os.makedirs(lh._log_dir(tbl))
+    winner = tmp_path / "tbl" / "_log" / "00001.json"
+    winner.write_text('{"version": 1, "op": "append", "add": ["data/w.parquet"], "remove": []}')
+    before = winner.read_bytes()
+    monkeypatch.setattr(lh, "_versions", lambda path: [0])
+    monkeypatch.setattr(lh.os.path, "exists", lambda p: False)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        lh._commit(tbl, "append", ["data/x.parquet"], [])
+    monkeypatch.undo()
+    assert winner.read_bytes() == before
+    assert os.listdir(lh._log_dir(tbl)) == ["00001.json"]
