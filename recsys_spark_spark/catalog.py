@@ -16,6 +16,7 @@ memory, and Spark's InMemoryFileIndex on the handle keeps the file listing.
 
 from __future__ import annotations
 
+import contextvars
 import functools
 import math
 import os
@@ -132,6 +133,32 @@ def memo(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
         return df
 
     return wrapper
+
+
+# JVM RDDs that checkpoint() made for the registered query running in this
+# context (registry.query sets a fresh list per call); None outside any query.
+_CHECKPOINTS: contextvars.ContextVar[list | None] = contextvars.ContextVar(
+    "checkpoints", default=None
+)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of `df`: the one lineage cut for iterative
+    operators (star contraction, BFS, label propagation, BPE merges, power
+    iterations), whose rounds otherwise re-run every earlier round.
+
+    Inside a registered query the checkpointed RDD goes on that call's
+    ledger, and ``registry.query`` releases it once the query's output is
+    materialized, so nothing a query checkpoints outlives
+    ``spark.catalog.clearCache()``. Outside any query (tests driving
+    ``star_contract`` directly) it only checkpoints. Memo builders must not
+    call it: a cleared memo entry recomputes from its plan, which would
+    read a released checkpoint."""
+    out = df.localCheckpoint(eager=True)
+    ledger = _CHECKPOINTS.get()
+    if ledger is not None:
+        ledger.append(out._jdf.logicalPlan().rdd())
+    return out
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import checkpoint, table
 from recsys_spark_spark.registry import query
 
 SWING_ALPHA = 1          # smoothing; integer so 1e12/(α+k) is an exact ratio
@@ -103,26 +103,25 @@ def q_cf_swing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = sm.select(F.col("u").alias("u1"), "i")
     b = sm.select(F.col("u").alias("u2"), F.col("i").alias("i2"))
-    tri = (
+    # the triple table feeds both pair-join sides
+    tri = checkpoint(
         a.join(b, (F.col("i") == F.col("i2")) & (F.col("u1") < F.col("u2")))
         .select("u1", "u2", "i")
-        .localCheckpoint(eager=True)  # feeds both pair-join sides
     )
-    # r8 optimization (guide §2.4): the original shape exchanged the
-    # 7.5M-row checkpointed triple table BY (u1,u2) THREE times — once for
-    # the separate overlap-count aggregate and once per side of the
-    # tri x tri self-join — and then probed a third join to attach the
-    # overlap weight to every one of the Σk² pair rows (measured: three
-    # identical 77.5 MB exchanges plus a 672 s-run join stage at sf0.1).
+    # The original shape exchanged the 7.5M-row checkpointed triple table BY
+    # (u1,u2) THREE times — once for the separate overlap-count aggregate and
+    # once per side of the tri x tri self-join — and then probed a third join
+    # to attach the overlap weight to every one of the Σk² pair rows (measured:
+    # three identical 77.5 MB exchanges plus a 672 s-run join stage at sf0.1).
     # The overlap count now rides a WINDOW over the left join side: the
-    # window's single (u1,u2) exchange both computes k (so w_s is a
-    # column, not a join) and leaves the left side partitioned exactly as
-    # the pair join needs, so only the right side still exchanges — 3
-    # exchanges + 2 probes per pair row become 2 exchanges + 1 probe.
-    # (A collect_list + higher-order-function combination expansion was
-    # tried first and REJECTED: nested transform/slice/named_struct is
-    # interpreted per element, not codegen'd — measured 4,262 s CPU vs the
-    # join form's 498 s on the identical pair mass.)
+    # window's single (u1,u2) exchange both computes k (so w_s is a column, not
+    # a join) and leaves the left side partitioned exactly as the pair join
+    # needs, so only the right side still exchanges — 3 exchanges + 2 probes
+    # per pair row become 2 exchanges + 1 probe. (A collect_list +
+    # higher-order-function combination expansion was tried first and REJECTED:
+    # nested transform/slice/named_struct is interpreted per element, not
+    # codegen'd — measured 4,262 s CPU vs the join form's 498 s on the
+    # identical pair mass.)
     kw = Window.partitionBy("u1", "u2")
     left = tri.withColumn(
         "w_s",

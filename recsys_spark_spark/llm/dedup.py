@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo, spread, state_partitions, table
+from recsys_spark_spark.catalog import checkpoint, memo, spread, state_partitions, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.llm.similarity import _scaled_dot
 from recsys_spark_spark.registry import query
@@ -762,7 +762,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     round takes the min of its label and its neighbors' labels; converges in
     O(component diameter) rounds. This is the scalable CC algorithm — each
     round is one shuffle-keyed join + aggregate, no driver-side graph, and
-    the label frame is localCheckpoint()ed per round so lineage (and the
+    the label frame is checkpointed per round so lineage (and the
     re-execution cost of the whole upstream near-dup pipeline) does not grow
     with iterations. The driver-side loop-with-convergence-check is the
     standard Spark pattern for iterative algorithms (same shape MLlib uses);
@@ -796,7 +796,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     own label and its neighbors' labels — and (b) a pointer-jump step —
     label(x) ← label(label(x)) — so the component minimum spreads along
     label chains exponentially: O(log diameter) rounds instead of
-    O(diameter) (guide §2.4 — at sf0.1 the pure neighbor loop took 11
+    O(diameter) (at sf0.1 the pure neighbor loop took 11
     rounds of ~8 scheduler-bound stages each; with jumping it converges in
     4). Both steps only ever REPLACE a label with a smaller same-component
     label, and the loop exits on a no-change round, which in particular
@@ -817,18 +817,17 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    sym = edges.union(
-        edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).localCheckpoint()
+    sym = checkpoint(
+        edges.union(edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
+    )
     p = state_partitions(sym.count(), row_bytes=16)
-    sym = sym.coalesce(p).localCheckpoint()
+    sym = checkpoint(sym.coalesce(p))
     # nodes that appear in at least one dup pair; singletons are not clusters
-    labels = (
+    labels = checkpoint(
         sym.select(F.col("d1").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
         .coalesce(p)
-        .localCheckpoint()
     )
     for _ in range(max_rounds):
         neigh = (
@@ -836,7 +835,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
             .groupBy(F.col("d1").alias("doc_id"))
             .agg(F.min("label").alias("nl"))
         )
-        half = (
+        half = checkpoint(
             labels.join(neigh, "doc_id", "left")
             .select(
                 "doc_id",
@@ -844,13 +843,12 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
                 F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
             )
             .coalesce(p)
-            .localCheckpoint()
         )
         # pointer jump on the materialized half-step: follow my label's label
         # (labels only decrease and stay within the component, so l2 <= label
         # and the least() is a safety identity when the join misses).
         ptr = half.select(F.col("doc_id").alias("_pk"), F.col("label").alias("_l2"))
-        step = (
+        step = checkpoint(
             half.join(ptr, half.label == ptr._pk, "left")
             .select(
                 "doc_id",
@@ -858,7 +856,6 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
                 F.least(F.col("label"), F.coalesce("_l2", F.col("label"))).alias("label"),
             )
             .coalesce(p)
-            .localCheckpoint()
         )
         changed = step.where(F.col("label") != F.col("_old")).count()
         labels = step.select("doc_id", "label")

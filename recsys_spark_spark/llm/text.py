@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo, spread, table
+from recsys_spark_spark.catalog import checkpoint, memo, spread, table
 from recsys_spark_spark.registry import query
 from recsys_spark_spark.functions.determinism import dround, rlong
 
@@ -1233,14 +1233,17 @@ def _bpe_merge_stages(cur: DataFrame, k: int, carry: tuple = ()):
     ``carry`` columns that ride through untouched); returns the final
     sequence table and the per-step merge-rule heads.
 
-    Each stage's table is localCheckpoint(eager=True)-truncated: stage
+    Each stage's table is checkpoint-truncated: stage
     k's pair count and the k-th head would otherwise re-execute stages
     1..k-1's replaces through the lazy lineage — O(K²) stage work total,
     measured at 70 s for the sf0.1 training query before truncation
     (the star_contract lesson; checkpoint() on a cluster). The dict is
-    vocabulary-sized, so each checkpoint job is tiny."""
+    vocabulary-sized, so each checkpoint job is tiny. The stage's rule
+    rides its checkpoint as constant columns, so a head reads one
+    checkpointed row instead of recounting the stage's pairs."""
     heads = []
     for i in range(1, k + 1):
+        cur = cur.select(*carry, "seq", "freq")
         syms = F.split(F.trim(F.col("seq")), "  ")
         pairs = F.when(
             F.size(syms) > 1,
@@ -1267,23 +1270,29 @@ def _bpe_merge_stages(cur: DataFrame, k: int, carry: tuple = ()):
                 F.split("pair", " ")[1].alias("r"),
             )
         )
+        cur = checkpoint(
+            cur.crossJoin(F.broadcast(best)).select(
+                *carry,
+                F.replace(
+                    F.col("seq"),
+                    F.concat(F.lit(" "), F.col("l"), F.lit("  "), F.col("r"), F.lit(" ")),
+                    F.concat(F.lit(" "), F.col("l"), F.col("r"), F.lit(" ")),
+                ).alias("seq"),
+                "freq",
+                "pair",
+                "cnt",
+                "l",
+                "r",
+            )
+        )
         heads.append(
-            best.select(
+            cur.select(
                 F.lit(i).cast("long").alias("step"),
                 "pair",
                 F.concat("l", "r").alias("new_symbol"),
                 F.col("cnt").cast("long").alias("pair_count"),
-            )
+            ).limit(1)
         )
-        cur = cur.crossJoin(F.broadcast(best.select("l", "r"))).select(
-            *carry,
-            F.replace(
-                F.col("seq"),
-                F.concat(F.lit(" "), F.col("l"), F.lit("  "), F.col("r"), F.lit(" ")),
-                F.concat(F.lit(" "), F.col("l"), F.col("r"), F.lit(" ")),
-            ).alias("seq"),
-            "freq",
-        ).localCheckpoint(eager=True)
     return cur, heads
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import memo, state_partitions, table
+from recsys_spark_spark.catalog import checkpoint, memo, state_partitions, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
 
@@ -324,17 +324,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     edges = _pr_edges(spark, sf_dir)
-    # r8 optimization (guide §3.1/§2.4, the q_graph_eigencentrality fix
-    # applied to its sibling): deg is node-sized but derives from an
-    # aggregate, so without materialization every downstream reference
-    # re-aggregated the cached 25.4M-row edge table; localCheckpoint once
-    # (eager — deg.count() below forces it anyway) and every iteration
-    # reads the 640k materialized rows instead.
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint(eager=True)
-    )
+    # deg is node-sized but derives from an aggregate, so without
+    # materialization every downstream reference re-aggregated the cached
+    # 25.4M-row edge table; checkpointed once, every iteration reads the
+    # 640k materialized rows instead.
+    deg = checkpoint(edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
     n_nodes = deg.count()  # scalar: node count (items with >=1 edge)
     # half-away-from-zero like DuckDB ROUND / determinism.rlong — Python's
     # built-in round() is banker's and would diverge on .5 boundaries
@@ -352,11 +346,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcasts the persisted edge table is scanned in place and never
     # shuffled; only node-sized state (deg, pr, contrib — the
     # replicated-vertex-state pattern, catalog-scaled) moves. The
-    # per-iteration localCheckpoint on node-sized pr truncates lineage so
+    # per-iteration checkpoint of node-sized pr truncates lineage so
     # each broadcast build is a node-sized local job instead of a re-run
     # of every earlier iteration (the eigencentrality 2^i lesson).
     # Per-SRC contribution value, computed on the NODE-sized side before the
-    # broadcast (guide §1.2 step 2 — per-task work): every edge with the same
+    # broadcast (per-task work): every edge with the same
     # src carries the identical rlong(d·pr_s/outdeg), so evaluating the
     # division+rounding per edge row (25.4M times at sf0.1) and probing TWO
     # broadcast maps per row (deg, then pr) was pure per-edge overhead. The
@@ -375,14 +369,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c_s").alias("in_s"))
         )
-        pr = (
+        pr = checkpoint(
             deg.select(F.col("src").alias("node"))
             .join(F.broadcast(contrib), "node", "left")
             .select(
                 "node",
                 (base_s + F.coalesce("in_s", F.lit(0))).alias("pr_s"),
             )
-            .localCheckpoint(eager=True)
         )
     wr = Window.orderBy(F.col("pr_s").desc(), "node")
     return (
@@ -867,12 +860,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one item-keyed exchange), closures join on the (x, y) edge pair —
     never an all-pairs product; per-vertex counts are a count-sized
     aggregate of the exploded corners."""
-    # r8 optimization (guide §2.4/§5): triangle_counts references the edge
-    # list THREE times (e1/e2/e3), and each lazy reference re-derived the
-    # 13.1M-row co-occurrence pair shuffle. thresholded_edges() is the
-    # identical rule (this query's own contract), localCheckpointed — the
-    # pair join now runs once and the three join sides scan the checkpointed
-    # rows. (a, b) is canonical a > b, i.e. (y, x) here.
+    # triangle_counts references the edge list THREE times (e1/e2/e3), and each
+    # lazy reference re-derived the 13.1M-row co-occurrence pair shuffle.
+    # thresholded_edges() is the identical rule (this query's own contract),
+    # checkpointed — the pair join now runs once and the three join sides scan
+    # the checkpointed rows. (a, b) is canonical a > b, i.e. (y, x) here.
     e = thresholded_edges(spark, sf_dir).select(
         F.col("b").alias("x"), F.col("a").alias("y")
     )
@@ -967,15 +959,15 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(rlong(F.col("o_totalprice")).cast("long")).alias("m_dollars"),
         )
     )
-    # r8 (guide §2.6 idle capacity): the three ranks used to CHAIN — each
-    # global_rank consumed the previous one's output, serializing ~30
-    # scheduler-bound stages end-to-end (35 stages, 11 s task time, ~31 s
-    # wall at sf0.1 — pure depth, not work). The ranks are independent
-    # orderings of the same customer-sized base, so they now run as three
-    # independent BRANCHES off one checkpointed base (DAGScheduler submits
-    # ready stages concurrently) and join back on the unique key; each
-    # branch also sorts a 2-column frame instead of the accumulating one.
-    base = base.localCheckpoint(eager=True)
+    # The three ranks used to CHAIN — each global_rank consumed the previous
+    # one's output, serializing ~30 scheduler-bound stages end-to-end (35
+    # stages, 11 s task time, ~31 s wall at sf0.1 — pure depth, not work). The
+    # ranks are independent orderings of the same customer-sized base, so they
+    # now run as three independent BRANCHES off one checkpointed base
+    # (DAGScheduler submits ready stages concurrently) and join back on the
+    # unique key; each branch also sorts a 2-column frame instead of the
+    # accumulating one.
+    base = checkpoint(base)
     n = base.agg(F.count(F.lit(1)).alias("n"))
     ranked = base
     for col, pos in (("r_days", "pr"), ("f_orders", "pf"), ("m_dollars", "pm")):
@@ -1068,15 +1060,14 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are exact integers; ranks order by the unrounded ratio (same
     doubles both engines) with the partner id as tiebreak; one 6dp
     display rounding."""
-    # r8 optimization (guide §2.4/§5): the thresholded edge list is
-    # referenced SIX times through this DAG (both unionAll sides of `und`,
-    # which itself feeds deg + both wedge-join sides, plus the anti join),
-    # and every lazy reference re-derived the 13.1M-row co-occurrence pair
-    # shuffle — measured as six identical 116.6 MB / 13,127,405-row
-    # exchanges, 1,347 s CPU for the query at sf0.1. thresholded_edges()
-    # is the SAME rule (capped matrix + population-scaled floor, the
-    # q_graph_triangles contract), localCheckpointed, so the pair join now
-    # runs once. (a, b) is canonical a > b, i.e. (y, x) here.
+    # The thresholded edge list is referenced SIX times through this DAG (both
+    # unionAll sides of `und`, which itself feeds deg + both wedge-join sides,
+    # plus the anti join), and every lazy reference re-derived the 13.1M-row
+    # co-occurrence pair shuffle — measured as six identical 116.6 MB /
+    # 13,127,405-row exchanges, 1,347 s CPU for the query at sf0.1.
+    # thresholded_edges() is the SAME rule (capped matrix + population-scaled
+    # floor, the q_graph_triangles contract), checkpointed, so the pair join
+    # now runs once. (a, b) is canonical a > b, i.e. (y, x) here.
     e = thresholded_edges(spark, sf_dir).select(
         F.col("b").alias("x"), F.col("a").alias("y")
     )
@@ -1824,38 +1815,36 @@ def q_graph_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         # expensive query in the registry (104 s at sf0.1). Only the norm's
         # Σw² genuinely needs 128 bits (w² ≤ 1e26), and that aggregate is
         # node-sized and runs once per iteration — decimal stays there.
-        # r8 optimization (guide §3.1/§2.4): v is node-sized (640k rows /
-        # 3.8 MB at sf0.1) but derives from an aggregate, so the planner
-        # can't prove it broadcastable and compiled a shuffle join — and
-        # with AQE the 245.8 MB / 25.4M-row edge-side map stage runs
-        # BEFORE the runtime broadcast conversion, so every iteration
-        # still wrote the full edge shuffle (measured: 10 stages writing
-        # identical 245.8 MB exchanges, 108 s wall / 1,010 s CPU).
-        # An explicit broadcast compiles BroadcastHashJoin outright: the
-        # persisted edge table is scanned in place and never shuffled;
-        # only the node-sized w/v aggregates move. (Checkpointing edges
-        # pre-partitioned by dst was tried first and does NOT help: AQE
-        # coalesces the checkpoint shuffle, so the LogicalRDD reports
-        # unknown partitioning and the join re-exchanges.) Broadcasting
-        # the iteration vector is the replicated-vertex-state pattern —
-        # it scales with the CATALOG, not the data, and stays far under
-        # the broadcast cap wherever the matvec itself is feasible.
+        # v is node-sized (640k rows / 3.8 MB at sf0.1) but derives from an
+        # aggregate, so the planner can't prove it broadcastable and compiled a
+        # shuffle join — and with AQE the 245.8 MB / 25.4M-row edge-side map
+        # stage runs BEFORE the runtime broadcast conversion, so every
+        # iteration still wrote the full edge shuffle (measured: 10 stages
+        # writing identical 245.8 MB exchanges, 108 s wall / 1,010 s CPU). An
+        # explicit broadcast compiles BroadcastHashJoin outright: the persisted
+        # edge table is scanned in place and never shuffled; only the
+        # node-sized w/v aggregates move. (Checkpointing edges pre-partitioned
+        # by dst was tried first and does NOT help: AQE coalesces the
+        # checkpoint shuffle, so the LogicalRDD reports unknown partitioning
+        # and the join re-exchanges.) Broadcasting the iteration vector is the
+        # replicated-vertex-state pattern — it scales with the CATALOG, not the
+        # data, and stays far under the broadcast cap wherever the matvec
+        # itself is feasible.
+        #
         # Each iteration references w TWICE (the norm aggregate and the
-        # normalized projection), so without per-step lineage truncation
-        # the matvec subtree re-executes 2^i times — measured as exactly
-        # 14 = 8+4+2 identical 245.8 MB / 25.4M-row edge exchanges for
-        # the 3 unrolled iterations (exchange reuse does not fire across
-        # the duplicated AQE subtrees). localCheckpoint(eager) on the
-        # node-sized w (640k rows) truncates the chain per step — the
-        # module's iterative-operator discipline (BPE merges, star
-        # contraction). With w materialized, the broadcast build for the
-        # next iteration's v is a node-sized local job.
-        w = (
+        # normalized projection), so without per-step lineage truncation the
+        # matvec subtree re-executes 2^i times — measured as exactly 14 = 8+4+2
+        # identical 245.8 MB / 25.4M-row edge exchanges for the 3 unrolled
+        # iterations (exchange reuse does not fire across the duplicated AQE
+        # subtrees). Checkpointing the node-sized w (640k rows) truncates the
+        # chain per step — the module's iterative-operator discipline (BPE
+        # merges, star contraction). With w materialized, the broadcast build
+        # for the next iteration's v is a node-sized local job.
+        w = checkpoint(
             edges.join(F.broadcast(v), edges.dst == v.node)
             .select("src", (F.col("c") * F.col("v_s")).alias("cv"))
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("cv").alias("w"))
-            .localCheckpoint(eager=True)
         )
         nrm = w.agg(
             F.sqrt(
@@ -2258,9 +2247,9 @@ def star_contract(e: DataFrame, rounds: int) -> DataFrame:
 
     Each round references the previous edge set ~12 times through the
     star joins, so lazy composition would grow the analyzed plan ~12x per
-    round; localCheckpoint(eager=True) truncates the lineage to a
-    LogicalRDD each round (the local-mode stand-in for the cluster
-    checkpoint() a production run would use). State is always edge-sized
+    round; catalog.checkpoint truncates the lineage to a LogicalRDD each
+    round (the local-mode stand-in for the cluster checkpoint() a
+    production run would use). State is always edge-sized
     and strictly within-component; every stage is a keyed min-aggregate
     plus a keyed join — no driver-side state beyond the fixed round count.
     """
@@ -2291,16 +2280,16 @@ def star_contract(e: DataFrame, rounds: int) -> DataFrame:
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
         )
         e2 = sm.select("a", F.col("m").alias("b"))
-        e = e1.unionAll(e2).distinct().coalesce(p).localCheckpoint(eager=True)
+        e = checkpoint(e1.unionAll(e2).distinct().coalesce(p))
     return e
 
 
 def thresholded_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (a > b) edge list of the thresholded co-purchase graph —
     the triangle rule (capped matrix + population-scaled floor).
-    localCheckpointed, not persisted: each caller reads it ~12 times per
-    star round / per BFS hop within one query, so lineage truncation is
-    the point."""
+    Checkpointed, not persisted: each caller reads it ~12 times per star
+    round / per BFS hop within one query, so lineage truncation is the
+    point."""
     from recsys_spark_spark.cf.itemcf import capped_interactions, cooccurrence
 
     ui = capped_interactions(spark, sf_dir)
@@ -2312,12 +2301,11 @@ def thresholded_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("min_c")
     )
-    return (
+    return checkpoint(
         cooccurrence(ui)
         .crossJoin(F.broadcast(thr))
         .where(F.col("n_common") >= F.col("min_c"))
         .select(F.col("item_j").alias("a"), F.col("item_i").alias("b"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -2441,23 +2429,22 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the visited set — frontier/visited state is
     (seed x reached)-sized, never data-sized, and the hop count is FIXED
     so both engines unroll identically (exactness never depends on the
-    frontier dying out). Visited sets are localCheckpoint-truncated per
+    frontier dying out). Visited sets are checkpoint-truncated per
     hop (each hop references the previous state twice; the star_contract
     lineage lesson). Edges and the degree-ranked seeds reuse the shared
     thresholded_edges builder (capped matrix + population-scaled floor),
     so at 100x the per-hop join is bounded by catalog-sized degree, not
     by raw interactions."""
     e0 = thresholded_edges(spark, sf_dir)
-    # r8: byte-derived partition budget for the catalog-sized BFS state —
+    # Byte-derived partition budget for the catalog-sized BFS state —
     # und/frontier/visited otherwise iterate on 32-64 partition checkpoints
     # (measured: three 64-task hop stages, 74-141 s wall, <9 s executor CPU
     # — pure task-launch overhead). See catalog.state_partitions.
     p = state_partitions(e0.count(), row_bytes=16)
-    und = (
+    und = checkpoint(
         e0.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(e0.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .coalesce(p)
-        .localCheckpoint(eager=True)
     )
     wd = Window.orderBy(F.col("deg").desc(), "u")
     seeds = (
@@ -2467,21 +2454,18 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rnk") <= KHOP_SEEDS)
         .select(F.col("u").alias("seed"))
     )
-    frontier = seeds.select("seed", F.col("seed").alias("node")).localCheckpoint(
-        eager=True
-    )
+    frontier = checkpoint(seeds.select("seed", F.col("seed").alias("node")))
     visited = frontier
     heads = []
     for h in range(1, KHOP_HOPS + 1):
-        frontier = (
+        frontier = checkpoint(
             frontier.join(und, frontier.node == und.u)
             .select("seed", F.col("v").alias("node"))
             .distinct()
             .join(visited, ["seed", "node"], "left_anti")
             .coalesce(p)
-            .localCheckpoint(eager=True)
         )
-        visited = visited.unionAll(frontier).coalesce(p).localCheckpoint(eager=True)
+        visited = checkpoint(visited.unionAll(frontier).coalesce(p))
         heads.append(
             frontier.groupBy("seed").agg(
                 F.lit(h).cast("long").alias("hop"),

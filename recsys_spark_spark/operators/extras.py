@@ -18,9 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recsys_spark_spark.catalog import TMP_DIR, table
+from recsys_spark_spark.catalog import TMP_DIR, checkpoint, table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
+from recsys_spark_spark.sinks import write_back
 
 
 @query(
@@ -378,7 +379,7 @@ def q_sql_recursive_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recsys_spark_spark.catalog import register_views
 
     register_views(spark, sf_dir)
-    # r8 optimization, two parts (guide §2.4/§6.1):
+    # Two fixes:
     # 1. The bigram build (token explode + pair count) inherited the
     #    single-row-group documents scan's ONE task (a 9.9 s 1-task stage
     #    at sf0.1 — the SQL-mode twin of the committed catalog.spread fix):
@@ -387,21 +388,24 @@ def q_sql_recursive_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    recursion references ONCE PER LEVEL — measured 18 identical
     #    29k-row bigram-count stages for 9 walk levels (~2 per level, both
     #    ends of the per-level join). The corpus-sized LM is now built
-    #    once, localCheckpointed, and exposed to the recursion as the
+    #    once, checkpointed, and exposed to the recursion as the
     #    walk_counts-derived walk_best/walk_seed views, so each level is a
     #    single tiny join against materialized vocabulary-sized state.
     #    The recursion itself — the declared Spark-4 WITH RECURSIVE
     #    surface — is unchanged.
     par = spark.sparkContext.defaultParallelism
-    counts = spark.sql(_WALK_LM_SQL.format(par=par)).localCheckpoint(eager=True)
-    counts.createOrReplaceTempView("walk_counts")
-    spark.sql(_WALK_BEST_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "walk_best"
+    checkpoint(spark.sql(_WALK_LM_SQL.format(par=par))).createOrReplaceTempView(
+        "walk_counts"
     )
-    spark.sql(_WALK_SEED_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "walk_seed"
-    )
+    checkpoint(spark.sql(_WALK_BEST_SQL)).createOrReplaceTempView("walk_best")
+    checkpoint(spark.sql(_WALK_SEED_SQL)).createOrReplaceTempView("walk_seed")
     return spark.sql(_WALK_SQL_SPARK)
+
+
+def dpp_layout(sf_dir: str) -> str:
+    """The partitioned fact layout q_join_dpp keeps for `sf_dir`."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    return os.path.join(TMP_DIR, f"dpp_fact_{digest}")
 
 
 @query(
@@ -433,13 +437,14 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB with date-partitioned facts this is the difference between
     scanning two partitions and scanning the lake whenever the partition
     set comes from a query rather than a literal."""
-    # per-source layout path: a shared fixed path would let a later
+    # One layout per source dir: a shared fixed path would let a later
     # invocation for ANOTHER sf_dir overwrite the directory a still-lazy
-    # earlier DataFrame reads from; write-once per source (the _SUCCESS
-    # marker makes a completed layout detectable). The key fingerprints the
-    # source parquet's mtime+size, not just its path — a regenerated testdata
-    # set at the same path must NOT be served a stale layout while the oracle
-    # reads the fresh file.
+    # earlier DataFrame reads from. The layout records the fingerprint of
+    # the source parquet's mtime+size it was written from (as an empty
+    # `_source_<fp>` file, which Spark's file listing skips); a regenerated
+    # testdata set at the same path must NOT be served a stale layout while
+    # the oracle reads the fresh file, so a changed fingerprint rewrites the
+    # layout in place.
     src = os.path.join(sf_dir, "orders.parquet")
     if os.path.isdir(src):
         stats = sorted(
@@ -450,13 +455,16 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         stats = [(src, os.path.getmtime(src), os.path.getsize(src))]
     fp = hashlib.md5(f"{sf_dir}:{stats}".encode()).hexdigest()[:12]
-    out = os.path.join(TMP_DIR, f"dpp_fact_{fp}")
+    out = dpp_layout(sf_dir)
+    stamp = os.path.join(out, f"_source_{fp}")
     fact_src = table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        fact_src.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    fact = spark.read.schema(fact_src.schema).parquet(out)
+    if os.path.exists(stamp):
+        fact = spark.read.schema(fact_src.schema).parquet(out)
+    else:
+        fact = write_back(fact_src, out, "o_year")
+        open(stamp, "w").close()
     dim = (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")

@@ -7,10 +7,13 @@ string. ``__spark_entry__.py`` exposes these to the driver.
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from recsys_spark_spark.catalog import _CHECKPOINTS
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -121,15 +124,42 @@ _loaded = False
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a query callable and (optionally) its DuckDB oracle."""
+    """Decorator: register a query callable and (optionally) its DuckDB oracle.
+
+    The registered callable owns the checkpoints its call makes through
+    ``catalog.checkpoint``, nested keys included: each call keeps its own
+    ledger, so a key called by another releases only its own. A call that
+    checkpointed nothing returns its frame untouched. Otherwise the output
+    is persisted and counted, every checkpoint is released (also when the
+    call raises), and the persisted frame is returned: it stays valid until
+    the next ``spark.catalog.clearCache()``, the same contract as
+    ``catalog.memo``, and that reset leaves nothing of the call behind. The
+    module-level name is this wrapper (``functools.wraps`` keeps
+    ``__module__``), so direct calls between keys follow the same rule."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            made: list = []
+            token = _CHECKPOINTS.set(made)
+            try:
+                df = fn(spark, sf_dir)
+                if made:
+                    df = df.persist()
+                    df.count()
+            finally:
+                _CHECKPOINTS.reset(token)
+                for rdd in made:
+                    rdd.unpersist(False)
+            return df
+
+        QUERIES[name] = run
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return run
 
     return deco
 

@@ -245,15 +245,16 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the JDBC side is the small operational store, never the lake:
     this query is the template for dimension syncs — partitioned pull,
     filter pushed to the DB, heavy lifting (joins/aggs) in Spark. The Derby
-    DB dir is per-session+source (applicationId+sf_dir fingerprint), and the
-    write runs fresh per invocation — no stale-cache class, and no
-    cross-process embedded-Derby lock contention."""
+    database is in-memory and per-session+source (applicationId+sf_dir
+    fingerprint): it lives only as long as the JVM, so nothing is left on
+    disk, and the write runs fresh per invocation — no stale-cache class,
+    and no cross-process embedded-Derby lock contention."""
     import hashlib
 
     fp = hashlib.md5(
         f"{spark.sparkContext.applicationId}:{sf_dir}".encode()
     ).hexdigest()[:10]
-    url = f"jdbc:derby:{os.path.join(TMP_DIR, 'derby_' + fp)};create=true"
+    url = f"jdbc:derby:memory:derby_{fp};create=true"
     opts = {"url": url, "driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
     cust = table(spark, sf_dir, "customer")

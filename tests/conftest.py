@@ -17,3 +17,17 @@ def spark():
     spark = get_spark(app_name="recsys-spark-tests", shuffle_partitions=8)
     yield spark
     # Session is shared process-wide; do not stop (other fixtures may hold it).
+
+
+def persistent_ids(spark) -> set[int]:
+    """Ids of the session's persistent RDDs, read with one py4j call."""
+    text = str(spark.sparkContext._jsc.getPersistentRDDs().keySet().toString())
+    return {int(i) for i in text.strip("[]").split(",") if i.strip()}
+
+
+def checkpoints_left(spark, before: set[int]) -> list[int]:
+    """Persistent, locally checkpointed RDDs not among `before`."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sorted(
+        i for i in persistent_ids(spark) - before if rdds.get(i).rdd().isLocallyCheckpointed()
+    )

@@ -287,20 +287,23 @@ def test_dpp_layout_refreshes_when_source_changes(spark, tmp_path):
     while the oracle reads the new file (ADVICE round 3)."""
     import shutil
 
-    from recsys_spark_spark.operators.extras import q_join_dpp
+    from recsys_spark_spark.operators.extras import dpp_layout, q_join_dpp
 
     sf = str(tmp_path / "sf")
     (tmp_path / "sf").mkdir()
     shutil.copy("/root/testdata/sf0.001/orders.parquet", sf + "/orders.parquet")
-    before = {(r.o_year, r.n_orders) for r in q_join_dpp(spark, sf).collect()}
+    try:
+        before = {(r.o_year, r.n_orders) for r in q_join_dpp(spark, sf).collect()}
 
-    # regenerate the source at the SAME path with half the rows
-    import pandas as pd
+        # regenerate the source at the SAME path with half the rows
+        import pandas as pd
 
-    pdf = pd.read_parquet(sf + "/orders.parquet")
-    pdf.iloc[: len(pdf) // 2].to_parquet(sf + "/orders.parquet", index=False)
-    after = {(r.o_year, r.n_orders) for r in q_join_dpp(spark, sf).collect()}
-    assert before != after, "stale partitioned layout served after source regeneration"
+        pdf = pd.read_parquet(sf + "/orders.parquet")
+        pdf.iloc[: len(pdf) // 2].to_parquet(sf + "/orders.parquet", index=False)
+        after = {(r.o_year, r.n_orders) for r in q_join_dpp(spark, sf).collect()}
+        assert before != after, "stale partitioned layout served after source regeneration"
+    finally:
+        shutil.rmtree(dpp_layout(sf), ignore_errors=True)
 
 
 def test_jdbc_scan_pushes_filter_and_partitions(spark):

@@ -252,9 +252,9 @@ def main() -> int:
     def measure(fn, collect: bool) -> dict:
         entry: dict = {}
         for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            # time the query-construction call too: eager operators (the
-            # star-contraction localCheckpoint rounds) do their work inside
-            # fn(), not in the final action — plan digest stays untimed
+            # time the query-construction call too: a key that checkpoints
+            # (the star-contraction rounds) does its work inside fn(), not
+            # in the final action — plan digest stays untimed
             t = time.time()
             df = fn(spark, sf_dir)
             build_s = time.time() - t
