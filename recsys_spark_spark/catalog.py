@@ -4,25 +4,32 @@ Mirrors the reference's Hive-table sourcing (SURVEY.md §2.1) with parquet +
 temp views. At 100 TB these would be date-partitioned, key-bucketed external
 tables; the loader is the single place that knowledge lives.
 
-Table handles are cached per (session, sf_dir, name): ``spark.read.parquet``
-eagerly lists files and reads parquet footers for schema inference on every
-call (~120-175 ms per table on this host), so a query touching five tables
-paid ~0.7 s of pure metadata overhead per invocation. A real deployment
-resolves tables through a metastore whose schemas and file listings are
-cached; reusing the analyzed DataFrame handle is the local equivalent. The
-handle is a logical plan, not data — caching it never pins row data in
-memory, and Spark's InMemoryFileIndex on the handle keeps the file listing.
+A table's schema is resolved on the driver: ``_read`` reads the footer that
+``spark.read.parquet`` would infer from and converts it with Spark's own
+``ParquetToSparkSchemaConverter``, then reads with that schema. The result
+equals inference (nanosAsLong, NTZ and Spark's row-metadata key included,
+since it is the same converter) but starts no Spark job: about 25 ms per
+table on the driver, where an inference job took 70-120 ms. This is the
+metastore's rule of keeping the schema with the table instead of
+re-deriving it per read.
+
+Table handles are cached per (session, sf_dir, name). The handle is a
+logical plan, not data — caching it never pins row data in memory, and
+Spark's InMemoryFileIndex on the handle keeps the file listing.
 """
 
 from __future__ import annotations
 
+import contextlib
 import contextvars
 import functools
+import json
 import math
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -58,6 +65,35 @@ def _ensure_utc(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema resolved on the driver.
+
+    The footer is the one inference reads with mergeSchema=false: the file
+    itself, or in a directory ``_common_metadata``, else ``_metadata``, else
+    the first data file by name. Spark's own converter, built from the
+    session's conf as it is now, turns it into the inferred schema."""
+    jvm, jss = spark._jvm, spark._jsparkSession
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hconf = jss.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(hconf)
+    status = fs.getFileStatus(root)
+    if status.isDirectory():
+        names = [s.getPath().getName() for s in fs.listStatus(root)]
+        names = [n for n in names if n in ("_common_metadata", "_metadata") or not n.startswith(("_", "."))]
+        first = min(names, key=lambda n: (n != "_common_metadata", n != "_metadata", n))
+        status = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(root, first))
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hconf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
+        pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+    )
+    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))).parquet(path)
+
+
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
@@ -67,18 +103,19 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # precision — with the session timeZone pinned to UTC the NTZ cast is
         # wall-clock-identity, so every downstream query sees the same values
         # DuckDB does regardless of which generation is on disk (SURVEY §7.5).
+        # nanosAsLong is set before _read builds its converter from the conf.
         from pyspark.sql import functions as F
 
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":  # nanos generation, via nanosAsLong
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_type != "timestamp":  # timestamp_ntz generation
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -159,6 +196,24 @@ def checkpoint(df: DataFrame) -> DataFrame:
     if ledger is not None:
         ledger.append(out._jdf.logicalPlan().rdd())
     return out
+
+
+@contextlib.contextmanager
+def owned_persists(spark: SparkSession) -> Iterator[None]:
+    """Put the RDDs that the block leaves persisted on the running query's
+    ledger, as ``checkpoint`` does with its own: for library code that
+    persists its result itself (MLlib's ALS keeps its final user and item
+    factor RDDs). ``registry.query`` then materializes the query's output
+    before releasing them. Outside any query it changes nothing. The block
+    must not be the first to compute a ``@memo`` frame: that frame's cache
+    would be released with the rest."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    yield
+    ledger = _CHECKPOINTS.get()
+    if ledger is not None:
+        now = rdds()
+        ledger.extend(now.get(i) for i in set(now.keySet()) - before)
 
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:

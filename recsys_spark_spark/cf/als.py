@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recsys_spark_spark.catalog import owned_persists
 from recsys_spark_spark.cf.itemcf import interactions
 from recsys_spark_spark.registry import query
 
@@ -46,7 +47,8 @@ def q_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratingCol="rating",
         coldStartStrategy="drop",
     )
-    model = als.fit(ui)
+    with owned_persists(spark):  # the fit leaves its 2 factor RDDs persisted
+        model = als.fit(ui)
     recs = model.recommendForAllUsers(TOP_N)
     return recs.select(
         F.col("user").cast("long").alias("user_id"),

@@ -21,7 +21,7 @@ The 100 TB dedup ladder:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -808,9 +808,10 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     partition, 1 locally, ~320 for a 20 GB edge set) — the
     KB-sized label frame otherwise re-materializes on the session's full
     shuffle width every round, paying dozens of task launches for
-    microseconds of work. The changed-count rides the checkpointed frame
-    (the round's old label is carried as a column), so the convergence
-    check is a one-stage scan instead of a labels-vs-labels join.
+    microseconds of work. A round is one checkpoint: the half-step is not
+    materialized on its own, and the changed-count is an ``Observation`` on
+    the checkpointed step (the round's old label is carried as a column),
+    so the convergence check runs no job of its own.
     `max_rounds` is a safety bound; hitting it raises instead of returning
     silently-wrong labels. Property-tested against a union-find reference
     in tests/test_cf_property.py.
@@ -835,19 +836,17 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
             .groupBy(F.col("d1").alias("doc_id"))
             .agg(F.min("label").alias("nl"))
         )
-        half = checkpoint(
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("label").alias("_old"),
-                F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
-            )
-            .coalesce(p)
+        half = labels.join(neigh, "doc_id", "left").select(
+            "doc_id",
+            F.col("label").alias("_old"),
+            F.least(F.col("label"), F.coalesce("nl", F.col("label"))).alias("label"),
         )
-        # pointer jump on the materialized half-step: follow my label's label
-        # (labels only decrease and stay within the component, so l2 <= label
-        # and the least() is a safety identity when the join misses).
+        # pointer jump on the half-step: follow my label's label (labels only
+        # decrease and stay within the component, so l2 <= label and the
+        # least() is a safety identity when the join misses). Both sides of
+        # the join read the same exchanges of `half`.
         ptr = half.select(F.col("doc_id").alias("_pk"), F.col("label").alias("_l2"))
+        moved = Observation()
         step = checkpoint(
             half.join(ptr, half.label == ptr._pk, "left")
             .select(
@@ -856,8 +855,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
                 F.least(F.col("label"), F.coalesce("_l2", F.col("label"))).alias("label"),
             )
             .coalesce(p)
+            .observe(moved, F.count(F.when(F.col("label") != F.col("_old"), 1)).alias("n"))
         )
-        changed = step.where(F.col("label") != F.col("_old")).count()
+        changed = moved.get["n"]
         labels = step.select("doc_id", "label")
         if changed == 0:
             break

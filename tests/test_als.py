@@ -123,3 +123,24 @@ def test_same_seed_reproduces_recommendations(spark, als_fit):
     )
     assert first.exceptAll(again).count() == 0
     assert again.exceptAll(first).count() == 0
+
+
+def test_key_leaves_nothing_after_clear_cache(spark):
+    """The fit's 2 factor RDDs go on the key's ledger: the key's output is
+    materialized first, then they are released, so clearCache() leaves no
+    persistent RDD and the rows equal those of an unreleased fit."""
+    from recsys_spark_spark.cf import als
+    from tests.conftest import persistent_ids
+
+    spark.catalog.clearCache()
+    before = persistent_ids(spark)
+    got = als.q_als_recommend(spark, SF).collect()
+    spark.catalog.clearCache()
+    assert persistent_ids(spark) - before == set()
+    assert len(got) == TOP_N * len({r.user_id for r in got}) > 0
+    want = als.q_als_recommend.__wrapped__(spark, SF).collect()  # no ledger: the fit's RDDs stay
+    kept = persistent_ids(spark) - before
+    assert len(kept) == 2
+    for i in kept:
+        spark.sparkContext._jsc.getPersistentRDDs().get(i).unpersist(False)
+    assert sorted(got) == sorted(want)

@@ -176,6 +176,36 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert set(labels.values()) == {1}
 
 
+def test_connected_components_round_is_one_checkpoint(spark, monkeypatch):
+    """A label-propagation round materializes once: one checkpoint, whose
+    observed change count needs no job of its own."""
+    from recsys_spark_spark.llm import dedup
+    from tests.test_memo import _job_ids
+
+    calls: list[set[int]] = []
+    real = dedup.checkpoint
+
+    def spy(df):
+        before = _job_ids(spark)
+        out = real(df)
+        calls.append(_job_ids(spark) - before)
+        return out
+
+    monkeypatch.setattr(dedup, "checkpoint", spy)
+    chain = [(i, i + 1) for i in range(1, 17)]
+    df = spark.createDataFrame(chain, "d1 long, d2 long")
+    before = _job_ids(spark)
+    labels = dedup.connected_components(df)
+    total = _job_ids(spark) - before
+    rounds = calls[3:]  # after sym, its coalesced copy and the first labels
+    assert len(rounds) >= 3 and all(rounds)
+    # only sym.count() runs outside a checkpoint: nothing per round
+    outside = total - set().union(*calls)
+    assert 0 < len(outside) <= 2
+    assert max(len(r) for r in rounds) <= 8  # AQE runs each shuffle stage as a job
+    assert {r.cluster for r in labels.collect()} == {1}
+
+
 @pytest.mark.parametrize(
     "sf_dir",
     ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"],

@@ -134,11 +134,11 @@ def _inferring_parquet_reads(path: pathlib.Path, root: pathlib.Path) -> list[str
     return found
 
 
-def test_only_external_and_merged_reads_infer_a_parquet_schema():
-    """catalog._load reads external tables whose schema the engine does not
-    know; q_table_schema_evolution's mergeSchema read resolves the merged
-    footers on purpose. Every other read of parquet the engine wrote passes
-    the written schema."""
+def test_only_the_merged_read_infers_a_parquet_schema():
+    """q_table_schema_evolution's mergeSchema read resolves the merged
+    footers on purpose. Every other read passes a schema: the one the
+    engine wrote, or for catalog tables the one ``catalog._read`` resolves
+    from the footer on the driver (tests/test_catalog_schema.py)."""
     root = pathlib.Path(catalog.__file__).parent
     found = sorted(hit for path in sorted(root.rglob("*.py")) for hit in _inferring_parquet_reads(path, root))
-    assert found == ["catalog._load", "catalog._load", "lakehouse.q_table_schema_evolution"]
+    assert found == ["lakehouse.q_table_schema_evolution"]

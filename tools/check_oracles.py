@@ -11,6 +11,13 @@ Conditions, all set up in ``main()`` (importing this module for
 - the session is ``SparkSession.builder.master("local[*]").getOrCreate()``
   with Spark's default confs (200 shuffle partitions, no time-zone pin).
 
+One untimed trivial job runs right after the session starts, so the
+session's first-job warm-up (scheduler, executor threads, class loading)
+lands in no key's ``sec``: otherwise the first key of every run or resume
+paid it (on 4 cores ``q_sql_recursive_walk`` took 12.2 s as a resume's
+second key and 2.8 s mid-sweep). Table resolution runs no job, so nothing
+else absorbs the warm-up.
+
 Per key: ``clearCache()``, build the frame, ``toPandas()``. A key with an
 oracle must match it exactly (``oracle_type_problems`` + ``compare``:
 columns, row count, the order-insensitive multiset of values and the bit
@@ -270,6 +277,7 @@ def main() -> int:
     if todo:
         con = duck_connection(args.sf)
         spark = SparkSession.builder.master("local[*]").getOrCreate()
+        spark.range(1).count()  # the first-job warm-up, outside every key's sec
         for name in todo:
             row = run_key(spark, con, args.sf, name, queries[name], oracles.get(name))
             if row is None:
