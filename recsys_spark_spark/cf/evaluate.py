@@ -70,22 +70,26 @@ def _train_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return itemcf.flagship_chain(_train_interactions(spark, sf_dir))
 
 
+def _test_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The holdout slice: distinct (user_id, item_id) pairs on/after CUTOFF."""
+    o = table(spark, sf_dir, "orders").where(
+        F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
+    )
+    l = table(spark, sf_dir, "lineitem")
+    return (
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .select(F.col("o_custkey").alias("user_id"), F.col("l_partkey").alias("item_id"))
+        .distinct()
+    )
+
+
 @query("q_eval_metrics", oracle=_EVAL_SQL)
 def q_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: the train matrix feeds neighbors, scoring, the seen-filter,
     # and the coverage denominator. Fused neighbor path = one exchange,
     # identical output to cooccurrence→symmetrize→topk (itemcf docstring).
     ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
-
-    o = table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
-    )
-    l = table(spark, sf_dir, "lineitem")
-    test = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("user_id"), F.col("l_partkey").alias("item_id"))
-        .distinct()
-    )
+    test = _test_interactions(spark, sf_dir)
 
     # Five scalar counts as 1-row aggregates cross-joined into one lazy plan:
     # a single action, and Catalyst's exchange reuse dedups the shared recs/ui
@@ -182,16 +186,7 @@ def q_eval_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
-
-    o = table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
-    )
-    l = table(spark, sf_dir, "lineitem")
-    test = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("user_id"), F.col("l_partkey").alias("item_id"))
-        .distinct()
-    )
+    test = _test_interactions(spark, sf_dir)
     tu = test.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_test"))
 
     rel = recs.join(
@@ -280,16 +275,7 @@ def q_eval_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reciprocal rank is integer-nano-rounded per user so the final
     averages are insertion-order independent."""
     ui, recs = _train_interactions(spark, sf_dir), _train_recs(spark, sf_dir)
-
-    o = table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit(CUTOFF).cast("timestamp")
-    )
-    l = table(spark, sf_dir, "lineitem")
-    test = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("user_id"), F.col("l_partkey").alias("item_id"))
-        .distinct()
-    )
+    test = _test_interactions(spark, sf_dir)
     tu = test.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_test"))
 
     rel = recs.join(

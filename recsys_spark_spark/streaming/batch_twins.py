@@ -1,10 +1,22 @@
-"""3.K — batch twins of the streaming computations (SURVEY.md §3.K strategy).
+"""3.K — the registered batch keys of the streaming operators.
 
-Each streaming operator is implemented twice: the batch DataFrame form here
-(registered, DuckDB-oracled — the driver-checkable semantics) and the
-Structured Streaming form in streaming/streams.py (asserted equal to the
-batch twin in tests/test_streaming.py). Event time is truncated to seconds
-everywhere: the source is ns-precision and Spark reads µs (SURVEY.md §7.5).
+One builder per operator, run both ways: each key here applies its
+streams.py builder to the static catalog table, so the DuckDB oracle checks
+the same query that tests/test_streaming.py runs incrementally. Spark drops
+withWatermark from a batch plan (EliminateEventTimeWatermark), which is
+what makes one builder serve both modes.
+
+Four keys keep a batch form of their own:
+- q_stream_dedup: dropDuplicatesWithinWatermark is refused on a batch frame
+  (AnalysisException), so the key is the plain exact-id dedup;
+- q_stream_anomaly and q_stream_profile: applyInPandasWithState runs only
+  on streams, so the keys fold the same counters with window functions and
+  aggregates;
+- q_stream_late_drop: the key is the per-row watermark reference, a
+  stricter reading than the stream's batch-boundary watermark on purpose.
+
+Event time is truncated to seconds wherever it feeds a session or a state
+counter: the source is ns-precision and Spark reads µs (SURVEY.md §7.5).
 """
 
 from __future__ import annotations
@@ -16,8 +28,7 @@ from pyspark.sql.window import Window
 from recsys_spark_spark.catalog import table
 from recsys_spark_spark.functions.determinism import rlong
 from recsys_spark_spark.registry import query
-
-SESSION_GAP_S = 30 * 60
+from recsys_spark_spark.streaming import streams
 
 
 def events_with_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,15 +48,7 @@ GROUP BY 1, 2
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1: tumbling 1h windows per event type (F.window ≡ date_trunc for
     epoch-aligned hours)."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(rlong(F.col("value") * F.lit(1e6))) / F.lit(1e6)).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
+    return streams.stream_tumbling(table(spark, sf_dir, "events"))
 
 
 @query(
@@ -64,12 +67,7 @@ GROUP BY 1, 2
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2: sliding 1h windows every 15 min — each event lands in 4 windows
     (oracle expands the 4 covering window starts explicitly)."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    return streams.stream_sliding(table(spark, sf_dir, "events"))
 
 
 SESSION_ORACLE = f"""
@@ -79,7 +77,7 @@ WITH ev AS (
   SELECT user_id, event_id, sec,
          CASE WHEN date_diff('second',
                 LAG(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id), sec)
-                >= {SESSION_GAP_S}
+                >= {streams.SESSION_GAP_S}
               OR LAG(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) IS NULL
               THEN 1 ELSE 0 END AS is_new
   FROM ev
@@ -99,35 +97,10 @@ GROUP BY user_id, session_no
 
 @query("q_stream_session", oracle=SESSION_ORACLE)
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K3: session windows (30-min gap) per user — batch twin via the classic
-    lag + cumulative-sum sessionization. The streaming twin uses
-    F.session_window; tests assert both produce identical sessions
-    (boundary semantics: a gap of exactly 30min starts a NEW session, since
-    Spark session windows are [start, last+gap) end-exclusive)."""
-    ev = events_with_sec(spark, sf_dir).select("user_id", "event_id", "sec")
-    order = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    prev_sec = F.lag("sec").over(order)
-    flagged = ev.withColumn(
-        "is_new",
-        F.when(
-            prev_sec.isNull()
-            | ((F.unix_timestamp("sec") - F.unix_timestamp(prev_sec)) >= SESSION_GAP_S),
-            1,
-        ).otherwise(0),
-    )
-    cum = Window.partitionBy("user_id").orderBy("sec", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    numbered = flagged.withColumn("session_no", F.sum("is_new").over(cum))
-    return (
-        numbered.groupBy("user_id", "session_no")
-        .agg(
-            F.min("sec").alias("session_start"),
-            F.count(F.lit(1)).alias("n_events"),
-            (F.unix_timestamp(F.max("sec")) - F.unix_timestamp(F.min("sec"))).alias("duration_s"),
-        )
-        .select("user_id", "session_start", "n_events", "duration_s")
-    )
+    """K3: session windows per user. The oracle is the classic lag +
+    cumulative-sum sessionization: a gap of 30 min or more between
+    consecutive events (by second, then event_id) starts a new session."""
+    return streams.stream_session(table(spark, sf_dir, "events"))
 
 
 @query(
@@ -139,9 +112,9 @@ GROUP BY 1
 """,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5 batch twin: exact-id dedup (event_id is unique in the source, so
-    this is the identity — the streaming twin proves duplicates injected into
-    the stream are dropped within the watermark)."""
+    """K5 batch form: exact-id dedup (event_id is unique in the source, so
+    this is the identity — the streaming test proves duplicates injected into
+    the stream are dropped within the watermark by streams.stream_dedup)."""
     ev = table(spark, sf_dir, "events")
     return ev.dropDuplicates(["event_id"]).groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
@@ -171,10 +144,9 @@ FROM runs GROUP BY 1
 
 @query("q_stream_anomaly", oracle=ANOMALY_ORACLE)
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K6 batch twin: consecutive-error runs per user (gaps-and-islands);
-    an 'anomaly' is a run of ≥3 consecutive errors. The streaming twin keeps
-    the run counter in per-user state via transformWithStateInPandas/
-    applyInPandasWithState (streams.py)."""
+    """K6 batch form: consecutive-error runs per user (gaps-and-islands);
+    an 'anomaly' is a run of ≥3 consecutive errors. streams.stream_anomaly
+    keeps the run counter in per-user state via applyInPandasWithState."""
     ev = events_with_sec(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -214,13 +186,13 @@ GROUP BY 1
 """,
 )
 def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4 batch twin: per-row watermark reference semantics — arrival order is
+    """K4 batch form: per-row watermark reference semantics — arrival order is
     event_id order, the high-watermark is the running max event time, and a
     row whose ts trails the watermark by more than the 10-min delay is
     dropped before the tumbling count. This is the *strictest* (per-row)
     reading of Structured Streaming's watermark, which advances it only at
     batch boundaries — so the stream can only ever keep MORE rows than this
-    twin drops; the injected-late-row pytest (tests/test_streaming.py) covers
+    key drops; the injected-late-row pytest (tests/test_streaming.py) covers
     the real engine behavior.
 
     The global prefix max is DISTRIBUTED (round-5 rewrite, no unpartitioned
@@ -271,30 +243,11 @@ FROM events a JOIN events b
 """,
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K7 batch twin: interval self-join — clicks matched to same-user errors
-    within the next 5 minutes. The streaming twin (streams.stream_stream_join)
-    is a watermarked stream-stream join whose time constraint is what bounds
-    both state stores; batch expresses it as a range-condition join keyed on
-    user_id (the equi-part shuffles, the interval predicate filters within
-    the hash match — no cartesian)."""
-    ev = table(spark, sf_dir, "events")
-    a = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
-    )
-    b = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        F.col("user_id").alias("err_user"),
-        F.col("ts").alias("error_ts"),
-    )
-    return (
-        a.join(
-            b,
-            (F.col("user_id") == F.col("err_user"))
-            & (F.col("error_ts") >= F.col("click_ts"))
-            & (F.col("error_ts") < F.col("click_ts") + F.expr("INTERVAL 5 MINUTES")),
-        )
-        .select("click_id", "error_id", "user_id", "click_ts", "error_ts")
-    )
+    """K7: interval self-join — clicks matched to same-user errors within
+    the next 5 minutes. In batch the watermarks fall away and the
+    range-condition join is keyed on user_id (the equi-part shuffles, the
+    interval predicate filters within the hash match — no cartesian)."""
+    return streams.stream_stream_join(table(spark, sf_dir, "events"))
 
 
 @query(
@@ -309,14 +262,12 @@ GROUP BY user_id
 """,
 )
 def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K6b batch twin: per-user running activity profile (event count,
-    order-independent scaled-int value sum, last-seen second). The streaming
-    twin folds the same three counters through keyed state — the Spark 4
-    transformWithStateInPandas processor (streams.stream_profile) where its
-    protobuf dependency exists, else the applyInPandasWithState twin
-    (streams.stream_profile_applyinpandas; identical fold) — asserted
-    equivalent in tests/test_streaming.py. State is one fixed-width tuple
-    per user: bounded, partitioned by key, RocksDB-backed at scale."""
+    """K6b batch form: per-user running activity profile (event count,
+    order-independent scaled-int value sum, last-seen second).
+    streams.stream_profile folds the same three counters through
+    applyInPandasWithState, asserted equivalent in tests/test_streaming.py.
+    State is one fixed-width tuple per user: bounded, partitioned by key,
+    RocksDB-backed at scale."""
     ev = events_with_sec(spark, sf_dir)
     return ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -338,27 +289,14 @@ GROUP BY 1, 2
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K8: stream-static enrichment — the most common real streaming
     topology (join the event stream to a slowly-changing dimension, then
-    window-aggregate by a dimension attribute). Batch twin: events ⋈
-    customer on user_id, tumbling 1h windows per market segment. The
-    streaming form (streams.stream_enrich) joins the SAME static
-    DataFrame inside the micro-batch — Spark re-resolves the static side
-    per trigger, no state store involvement for the join itself; only the
-    windowed aggregate keeps state. Equivalence is pytest-asserted
-    (tests/test_streaming.py), driver-oracled here.
+    window-aggregate by a dimension attribute): events ⋈ customer on
+    user_id, tumbling 1h windows per market segment.
 
     Shape at 100 TB: the dim side broadcasts per micro-batch (or bucketed
     joins for a huge dim); the aggregate state is windows × segments —
     tiny, mergeable scaled-int sums."""
-    ev = table(spark, sf_dir, "events")
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        ev.join(cust, ev.user_id == cust.c_custkey)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment").alias("segment"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(rlong(F.col("value") * F.lit(1e6))) / F.lit(1e6)).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "segment", "n", "sum_value")
+    return streams.stream_enrich(
+        table(spark, sf_dir, "events"), table(spark, sf_dir, "customer")
     )
 
 
@@ -378,30 +316,14 @@ FROM q GROUP BY 1, 2
 def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K9: CHAINED windowed aggregations — 15-min tumbling counts
     re-aggregated into hourly max/total per event type, both stages
-    stateful. Spark supports multiple stateful operators in one streaming
-    query (append mode) since 3.4/4.x — the pattern behind every
-    multi-resolution rollup topology (fine windows feed coarse ones
-    without a second pipeline). Batch twin here; the streaming form
-    (streams.stream_chained) groups on window(window, '1 hour') over the
-    first stage's window column, equivalence pytest-asserted with a
-    watermark-advancing sentinel closing the final windows.
+    stateful in the streaming form (multiple stateful operators in one
+    append-mode query), the pattern behind every multi-resolution rollup
+    topology.
 
     Shape: stage-1 state is 15-min windows × types; stage-2 state is
     hours × types — both tiny, both keyed the same way (the hourly
-    grouping is a coarsening of the quarter key, so at scale the second
-    aggregate rides the first's partitioning)."""
-    ev = table(spark, sf_dir, "events")
-    q = ev.groupBy(
-        F.window("ts", "15 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return (
-        q.groupBy(F.window(F.col("w.start"), "1 hour").alias("h"), "event_type")
-        .agg(
-            F.max("n").cast("long").alias("max_quarter_n"),
-            F.sum("n").cast("long").alias("total_n"),
-        )
-        .select(F.col("h.start").alias("window_start"), "event_type", "max_quarter_n", "total_n")
-    )
+    grouping is a coarsening of the quarter key)."""
+    return streams.stream_chained(table(spark, sf_dir, "events"))
 
 
 # --- K-cms: incremental Count-Min sketch maintenance ----------------------
@@ -421,16 +343,10 @@ GROUP BY 1, 2
 
 @query("q_stream_cms", oracle=_cms_oracle())
 def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-cms batch twin: the Count-Min cell table of the events user_id
-    stream — the sketch q_cms_heavy_hitters maintains over lineitem,
-    here kept incrementally over an event stream. Because CMS cells are
-    plain keyed SUMS (linear, pytest-pinned in the batch query), the
-    Structured Streaming form (streams.stream_cms) is just the same
-    groupBy in complete mode: micro-batch deltas fold into exactly the
-    batch sketch, state bounded by d x w cells regardless of stream
-    length — the canonical bounded-state streaming aggregate (no
-    watermark needed, keys are sketch coordinates, not event keys)."""
-    from recsys_spark_spark.operators.aggregates import cms_cells
-
-    ev = table(spark, sf_dir, "events").select(F.col("user_id").alias("item"))
-    return cms_cells(ev)
+    """K-cms: the Count-Min cell table of the events user_id stream — the
+    sketch q_cms_heavy_hitters maintains over lineitem, here kept
+    incrementally over an event stream. CMS cells are plain keyed SUMS
+    (linear), so micro-batch deltas fold into exactly the batch sketch,
+    state bounded by d x w cells regardless of stream length (no watermark
+    needed, keys are sketch coordinates, not event keys)."""
+    return streams.stream_cms(table(spark, sf_dir, "events"))

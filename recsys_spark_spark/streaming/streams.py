@@ -1,12 +1,20 @@
 """3.K — real Structured Streaming implementations.
 
-Each function takes a *streaming* DataFrame with the events schema
-(ts timestamp, event_id long, user_id long, event_type string, value double)
-and returns the streaming result DataFrame. tests/test_streaming.py replays
-the events parquet through a file-stream source and asserts each result
-equals its registered batch twin (streaming/batch_twins.py) — that
-equivalence is the correctness argument for the streaming path, since the
-driver's oracle can only check batch.
+Each function takes an events DataFrame (ts timestamp, event_id long,
+user_id long, event_type string, value double) and returns the result
+DataFrame. One builder serves both modes: on a streaming source it runs
+incrementally, and on the static catalog table it is the registered batch
+key (streaming/batch_twins.py), which the DuckDB oracle checks. On a batch
+frame Spark's optimizer drops withWatermark (EliminateEventTimeWatermark),
+so the two modes compute the same query. tests/test_streaming.py replays
+the events parquet through a file-stream source and asserts incremental
+execution equals batch execution of the same builder.
+
+Four operators keep a batch form of their own in batch_twins.py:
+stream_dedup (dropDuplicatesWithinWatermark is refused on a batch frame),
+stream_anomaly and stream_profile (keyed-state APIs run only on streams)
+and stream_late_data_drop (its batch key is the per-row watermark
+reference, a stricter reading on purpose).
 
 Scale notes: all stateful ops are keyed by (window|user) → state is
 partitioned across executors' state stores (RocksDB in production);
@@ -26,7 +34,11 @@ from recsys_spark_spark.functions.determinism import rlong
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 WATERMARK = "10 minutes"
-SESSION_GAP = "30 minutes"
+SESSION_GAP_S = 30 * 60
+# session_window merges an event that lands exactly one gap after the last
+# one; the session contract starts a new session at a gap >= SESSION_GAP_S.
+# Event time is whole seconds here, so one microsecond less is exact.
+SESSION_GAP = f"{SESSION_GAP_S * 1_000_000 - 1} microseconds"
 
 
 def stream_tumbling(events: DataFrame) -> DataFrame:
@@ -53,7 +65,8 @@ def stream_sliding(events: DataFrame) -> DataFrame:
 
 
 def stream_session(events: DataFrame) -> DataFrame:
-    """K3: session windows (30-min gap) per user."""
+    """K3: session windows per user: a gap of SESSION_GAP_S or more between
+    consecutive events (at second precision) starts a new session."""
     sec = events.withColumn("sec", F.date_trunc("second", "ts"))
     return (
         sec.withWatermark("sec", WATERMARK)
@@ -161,8 +174,7 @@ def stream_stream_join(events: DataFrame) -> DataFrame:
     Both sides carry a watermark and the join condition bounds the event-time
     distance, so each side's state store retains only the watermark+interval
     horizon (without the time constraint a stream-stream join's state grows
-    forever). Inner join in append mode emits exactly the batch-join rows —
-    the equivalence the pytest harness asserts."""
+    forever). Inner join in append mode emits exactly the batch-join rows."""
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(
@@ -190,92 +202,10 @@ def stream_stream_join(events: DataFrame) -> DataFrame:
     ).select("click_id", "error_id", "user_id", "click_ts", "error_ts")
 
 
-# --- K6b: transformWithStateInPandas (Spark 4 stateful API) ----------------
+# --- K6b: per-user running profile in keyed state ----------------------
 
 _PROFILE_OUT = "user_id long, n_events long, sum_value double, last_event_s long"
 _PROFILE_STATE = "n long, sv long, last_s long"
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas runs its state server over protobuf; the
-    dependency ships with real Spark distributions but is absent in this
-    container — gate the API behind the import so callers can fall back to
-    the applyInPandasWithState twin (identical fold, older API)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _make_profile_processor():
-    """Build the StatefulProcessor lazily: the class only exists on Spark 4,
-    and constructing it at import time would couple module import to the
-    streaming API version."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ProfileProcessor(StatefulProcessor):
-        """Per-user (n_events, scaled value sum, last-seen second) counters in
-        a single fixed-width ValueState tuple. The value sum folds the
-        JVM-side pre-scaled longs (rlong(value*1e6) computed before the
-        stateful op), so state stays exact/order-independent and matches the
-        batch twin's scaled-integer aggregate bit-for-bit.
-
-        CAVEAT (also noted in BASELINE.md): this branch cannot execute in
-        this container — protobuf is absent, tws_available() is False — so
-        the ValueState.get()/update tuple-shape assumptions here are code-
-        reviewed but not exercised by any committed test run. Before claiming
-        the tws path on a full Spark distro, run
-        tests/test_streaming.py::test_profile_stateful_stream_equals_batch
-        there (it auto-selects this processor when protobuf exists). The
-        applyInPandasWithState twin below folds identically and IS covered."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("profile", _PROFILE_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, sv, last_s = self._state.get() if self._state.exists() else (0, 0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                sv += int(pdf["v_scaled"].sum())
-                last_s = max(last_s, int(pdf["sec_s"].max()))
-            self._state.update((n, sv, last_s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [sv / 1e6],
-                    "last_event_s": [last_s],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return ProfileProcessor()
-
-
-def stream_profile(events: DataFrame) -> DataFrame:
-    """K6b: per-user running profile via the Spark 4 transformWithState API —
-    the successor of applyInPandasWithState (K6), with explicit typed state
-    handles (ValueState) instead of a single opaque tuple. Requires the
-    RocksDB state store provider (set in the test harness; the default at
-    cluster scale)."""
-    ev = events.select(
-        "user_id",
-        rlong(F.col("value") * F.lit(1e6)).cast("long").alias("v_scaled"),
-        F.unix_timestamp(F.date_trunc("second", "ts")).alias("sec_s"),
-    )
-    return ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_profile_processor(),
-        outputStructType=_PROFILE_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def _profile_update(
@@ -283,9 +213,10 @@ def _profile_update(
     pdf_iter: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState twin of ProfileProcessor — the identical fold
-    over (n, scaled-sum, last-second), usable where protobuf (and thus
-    transformWithStateInPandas) is unavailable."""
+    """applyInPandasWithState update: fold the user's rows into the
+    (n, scaled value sum, last second) tuple. The value sum adds the
+    JVM-side pre-scaled longs (rlong(value*1e6)), so the state is exact and
+    order-independent and matches the batch key's scaled-integer sum."""
     n, sv, last_s = state.get if state.exists else (0, 0, 0)
     for pdf in pdf_iter:
         n += len(pdf)
@@ -302,9 +233,10 @@ def _profile_update(
     )
 
 
-def stream_profile_applyinpandas(events: DataFrame) -> DataFrame:
-    """K6b fallback twin: the same per-user profile fold through
-    applyInPandasWithState (no protobuf requirement)."""
+def stream_profile(events: DataFrame) -> DataFrame:
+    """K6b: per-user running profile (event count, value sum, last-seen
+    second) through applyInPandasWithState — one fixed-width state tuple per
+    user, emitted in update mode each batch."""
     ev = events.select(
         "user_id",
         rlong(F.col("value") * F.lit(1e6)).cast("long").alias("v_scaled"),
@@ -325,9 +257,7 @@ def stream_enrich(events: DataFrame, customers: DataFrame) -> DataFrame:
     The static side is a plain batch DataFrame: Spark re-evaluates it per
     micro-batch (a dim table updated between triggers is picked up), the
     join itself keeps NO state-store state, and with the watermark only
-    open windows stay in the aggregation state. Mirrors
-    batch_twins.q_stream_enrich exactly (same rlong scaled-int sum), which
-    the pytest harness asserts."""
+    open windows stay in the aggregation state."""
     dim = customers.select("c_custkey", "c_mktsegment")
     return (
         events.withWatermark("ts", WATERMARK)
@@ -348,8 +278,7 @@ def stream_chained(events: DataFrame) -> DataFrame:
     the FIRST stage's window column; each stage emits a 15-min/hourly row
     only once its watermark passes, so the test harness appends a
     far-future sentinel event that advances the watermark past every real
-    window (the sentinel's own window stays in state, never emitted).
-    Mirrors batch_twins.q_stream_chained exactly."""
+    window (the sentinel's own window stays in state, never emitted)."""
     q = (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
@@ -369,7 +298,7 @@ def stream_cms(events: DataFrame) -> DataFrame:
     """K-cms: incrementally maintained Count-Min sketch of user_id
     frequencies — state is the fixed d x w cell grid (bounded regardless
     of stream length), each micro-batch folds in by plain summation
-    (sketch linearity). Mirrors batch_twins.q_stream_cms exactly."""
+    (sketch linearity)."""
     from recsys_spark_spark.operators.aggregates import cms_cells
 
     return cms_cells(events.select(F.col("user_id").alias("item")))

@@ -17,12 +17,13 @@ from collections import defaultdict
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from recsys_spark_spark.catalog import TMP_DIR
 from recsys_spark_spark.operators.joins import _IV_GAP_S
 from recsys_spark_spark.registry import load_all
 
 QUERIES, _ = load_all()
 
-TMP = "/root/repo/.tmp/proptest_iv"
+TMP = os.path.join(TMP_DIR, "proptest_iv")
 BASE = 1_700_000_000 - (1_700_000_000 % 86400)  # a UTC day boundary
 
 

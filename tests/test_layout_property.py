@@ -20,11 +20,12 @@ import uuid
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from recsys_spark_spark.catalog import TMP_DIR
 from recsys_spark_spark.registry import load_all
 
 QUERIES, _ = load_all()
 
-TMP = "/root/repo/.tmp/proptest"
+TMP = os.path.join(TMP_DIR, "proptest")
 
 
 def _spark():

@@ -1,13 +1,22 @@
-"""Structured Streaming ≡ batch-twin equivalence (SURVEY.md §3.K strategy).
+"""Incremental execution ≡ batch execution of the same builder.
 
 The events table is replayed through a file-stream source in 4 time-ordered
-chunks; each streaming operator's result must equal its registered batch twin
-on the same data. This is the correctness argument for the streaming path —
-the driver's DuckDB oracle can only check the batch side.
+chunks, and each streams.py builder's streaming result must equal its
+registered q_stream_* key on the same data. Most keys are the builder itself
+applied to the catalog table, so the tests check one thing: the stream
+computes what the batch computes, and the DuckDB oracle checks the batch.
+
+Four keys keep a batch form of their own: q_stream_dedup
+(dropDuplicatesWithinWatermark is refused on a batch frame),
+q_stream_anomaly and q_stream_profile (keyed state runs only on streams)
+and q_stream_late_drop (the per-row watermark reference). The first three
+tests compare the stream with that form; the late-drop test asserts that
+rows behind the watermark are dropped.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import uuid
@@ -16,14 +25,17 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.catalog import table
+from recsys_spark_spark.catalog import TMP_DIR, table
 from recsys_spark_spark.registry import load_all
 from recsys_spark_spark.streaming import streams
 from tests.conftest import SF_SMOKE
 
 QUERIES, _ = load_all()
 
-TMP = "/root/repo/.tmp/streamtest"
+TMP = os.path.join(TMP_DIR, "streamtest")
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
 
 
 @pytest.fixture(scope="module")
@@ -51,9 +63,7 @@ def stream_src(spark):
 
 def run_stream(spark, stream_src, fn, mode, name):
     events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_src)
     )
@@ -94,9 +104,39 @@ def test_session_stream_equals_batch(spark, stream_src):
     assert as_multiset(got) == as_multiset(want)
 
 
+def test_session_gap_boundary_starts_new_session(spark):
+    """One user, consecutive gaps of 1799 s, 1800 s and 1801 s: a gap of
+    exactly 30 minutes starts a new session, as in the q_stream_session
+    oracle, so the sessions are {e0, e1}, {e2} and {e3}. The stream reads
+    one event per micro-batch; the batch runs the builder on the frame."""
+    t0 = datetime.datetime(2024, 1, 6, 22, 16, 14)
+    offsets = [0, 1799, 1799 + 1800, 1799 + 1800 + 1801]
+    ev = spark.createDataFrame(
+        [
+            (i, t0 + datetime.timedelta(seconds=o), 511, "click", 1.0, "{}")
+            for i, o in enumerate(offsets)
+        ],
+        EVENTS_SCHEMA,
+    )
+    want = [
+        (1799, 2, t0, 511),
+        (0, 1, t0 + datetime.timedelta(seconds=offsets[2]), 511),
+        (0, 1, t0 + datetime.timedelta(seconds=offsets[3]), 511),
+    ]
+    src = f"{TMP}/gap-{uuid.uuid4().hex[:8]}"
+    try:
+        for i in range(len(offsets)):
+            ev.where(F.col("event_id") == i).coalesce(1).write.mode("append").parquet(src)
+        got = run_stream(spark, src, streams.stream_session, "complete", "t_session_gap")
+        assert as_multiset(got) == sorted(want)
+        assert as_multiset(streams.stream_session(ev)) == sorted(want)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
 def test_dedup_stream_drops_injected_duplicates(spark, stream_src):
     """K5: duplicate a chunk into the source — stream output must still equal
-    the batch twin computed on the original (duplicates dropped by id)."""
+    the batch key computed on the original (duplicates dropped by id)."""
     dup_src = f"{TMP}/dup-{uuid.uuid4().hex[:8]}"
     shutil.rmtree(dup_src, ignore_errors=True)
     spark.read.parquet(stream_src).coalesce(1).write.mode("overwrite").parquet(dup_src)
@@ -110,7 +150,7 @@ def test_dedup_stream_drops_injected_duplicates(spark, stream_src):
 
 def test_anomaly_stateful_stream_equals_batch(spark, stream_src):
     """K6: per-user error-run counters folded through keyed state must match
-    the gaps-and-islands batch twin. Counters are monotonic → take the
+    the gaps-and-islands batch key. Counters are monotonic → take the
     per-user max across update-mode emissions."""
     got = run_stream(spark, stream_src, streams.stream_anomaly, "update", "t_anomaly")
     final = (
@@ -137,9 +177,7 @@ def test_watermark_drops_late_rows(spark):
     on_time.coalesce(1).write.mode("append").parquet(src)
 
     events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -200,9 +238,7 @@ def test_foreachbatch_upsert_sink(spark, stream_src):
         upsert_parquet(batch_df.sparkSession, target, merged, "user_id")
 
     events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_src)
     )
@@ -219,41 +255,21 @@ def test_foreachbatch_upsert_sink(spark, stream_src):
 
 
 def test_profile_stateful_stream_equals_batch(spark, stream_src):
-    """K6b: the per-user profile fold through keyed state must converge to the
-    batch twin. Runs the Spark 4 transformWithStateInPandas processor where
-    its protobuf dependency exists (real Spark distributions); in this
-    container (no protobuf, no pip) it exercises the applyInPandasWithState
-    twin — the identical fold through the older stateful API.
-    transformWithState additionally requires the RocksDB state store
-    provider; restore the previous provider afterwards so other streaming
-    tests keep their default."""
-    use_tws = streams.tws_available()
-    fn = streams.stream_profile if use_tws else streams.stream_profile_applyinpandas
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    if use_tws:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-    try:
-        got = run_stream(spark, stream_src, fn, "update", "t_profile")
-        # emissions per user have strictly increasing n_events → the row with
-        # the max n_events is the final state (works even for negative values)
-        from pyspark.sql.window import Window as W
+    """K6b: the per-user profile fold through keyed state must converge to
+    the batch key."""
+    got = run_stream(spark, stream_src, streams.stream_profile, "update", "t_profile")
+    # emissions per user have strictly increasing n_events → the row with
+    # the max n_events is the final state (works even for negative values)
+    from pyspark.sql.window import Window as W
 
-        wlast = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        final = (
-            got.withColumn("rn", F.row_number().over(wlast))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
-        want = QUERIES["q_stream_profile"](spark, SF_SMOKE)
-        assert as_multiset(final) == as_multiset(want)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    wlast = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    final = (
+        got.withColumn("rn", F.row_number().over(wlast))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+    want = QUERIES["q_stream_profile"](spark, SF_SMOKE)
+    assert as_multiset(final) == as_multiset(want)
 
 
 def test_stream_stream_join_equals_batch(spark, stream_src):
@@ -264,34 +280,10 @@ def test_stream_stream_join_equals_batch(spark, stream_src):
     assert as_multiset(got) == as_multiset(want)
 
 
-def test_profile_fallback_path_is_exercised_without_protobuf(spark, stream_src):
-    """Pin WHICH stateful API the profile stream actually runs in this
-    container (VERDICT r3 #7): protobuf is absent here, so tws_available()
-    must be False and the fallback's analyzed streaming plan must carry the
-    applyInPandasWithState node — proof the committed equivalence test above
-    covered the fallback fold, not the untestable tws branch. On a full
-    distro with protobuf this test flips to asserting the tws node instead."""
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_src)
-    )
-    if streams.tws_available():
-        df = streams.stream_profile(events)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert "TransformWithStateInPySpark" in plan or "TransformWithState" in plan
-    else:
-        df = streams.stream_profile_applyinpandas(events)
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert "FlatMapGroupsInPandasWithState" in plan, plan[:1500]
-
-
 def test_stream_static_enrich_equals_batch(spark, stream_src):
     """K8: stream-static dim join + windowed agg emits exactly the batch
-    twin's rows in complete mode once all files are processed."""
-    customers = spark.read.parquet(f"{SF_SMOKE}/customer.parquet")
+    key's rows in complete mode once all files are processed."""
+    customers = table(spark, SF_SMOKE, "customer")
     got = run_stream(
         spark,
         stream_src,
@@ -305,7 +297,7 @@ def test_stream_static_enrich_equals_batch(spark, stream_src):
 
 def test_chained_windowed_aggs_equal_batch(spark, stream_src):
     """K9: two chained stateful windowed aggregations in one append-mode
-    query emit exactly the batch twin's rows once a far-future sentinel
+    query emit exactly the batch key's rows once a far-future sentinel
     advances the watermark past every real window. The sentinel's own
     rows stay in state (its windows never close) and so never surface."""
     import shutil as _sh
@@ -318,7 +310,7 @@ def test_chained_windowed_aggs_equal_batch(spark, stream_src):
     ev.coalesce(1).write.mode("append").parquet(src)
     sentinel = spark.createDataFrame(
         [(-1, None, -1, "_wm_sentinel", 0.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+        EVENTS_SCHEMA,
     ).withColumn(
         "ts",
         F.lit(ev.agg(F.max("ts")).first()[0]) + F.expr("INTERVAL 6 HOURS"),
