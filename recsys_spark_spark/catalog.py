@@ -218,7 +218,7 @@ def owned_persists(spark: SparkSession) -> Iterator[None]:
 
 def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin a low-parallelism source across the session's cores
-    before CPU-heavy per-row work (r8 optimization, guide §1.2/§2.5).
+    before CPU-heavy per-row work.
 
     The test corpus ships as single-row-group parquet files, so every scan
     is ONE task — and chains whose cost scales with per-row compute or
@@ -226,7 +226,7 @@ def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     verify predicates) inherit that single task: input-byte-based split
     sizing cannot see compute-bound stages. Measured: q_join_fuzzy ran 44 s
     of its 45 s CPU in one task; q_sim_setjoin_prefix spent ~60 s across
-    six 1-task stages (plans/r08/).
+    six 1-task stages.
 
     Scale-adaptive: when the scan already yields at least the session's
     parallelism (any real multi-file/multi-row-group table at cluster

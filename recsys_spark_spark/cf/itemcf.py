@@ -43,10 +43,10 @@ MAX_USER_HISTORY = 1000
 # source (an item with audience c yields c^2 directional pairs). Every tested
 # SF's max item audience is <= 53 (guarded at sf0.001/sf0.01/sf0.1 in
 # tests/test_cf_property.py), so capped == uncapped and the user-sim oracles
-# stay exact; the round-7 sf1 probe ("10x users, same catalog" — audiences
-# 10x) measured q_cf_user_recommend at 35x wall-clock for 10x data before any
-# cap and 31.4x under the r7 cap of 200 (audiences 530 sat only 2.65x over
-# it, so the cap had barely engaged). Round 8 tightens it to 64 — the Swing
+# stay exact; the sf1 probe ("10x users, same catalog" — audiences 10x)
+# measured q_cf_user_recommend at 35x wall-clock for 10x data before any cap
+# and 31.4x under an earlier cap of 200 (audiences 530 sat only 2.65x over
+# it, so the cap had barely engaged). The cap is therefore 64 — the Swing
 # C(30,2) discipline: per-item pair mass is bounded at 64^2 ≈ 4.1k
 # directional pairs regardless of audience, which saturates at the sf1
 # replica (530 ≫ 64) and turns the pair stage flat in audience growth. Like
@@ -564,7 +564,7 @@ def topk_user_neighbors(ui: DataFrame, k: int = TOP_K_NEIGHBORS) -> DataFrame:
     self-join, are repartitioned by user_a ONCE, and count → cosine →
     window-top-k run partition-local (same WindowGroupLimit pruning).
     At scale hot *items* are the skew source here — the mirror of hot users
-    in ItemCF; since round 7 the pair-generation sides ride audience_capped
+    in ItemCF; the pair-generation sides ride audience_capped
     (MAX_ITEM_AUDIENCE, capped == uncapped at every tested SF — the sf1
     probe measured 35x for 10x data from 10x audiences before the cap).
     Norms stay full-history (true cosine denominator)."""
@@ -623,8 +623,8 @@ USER_COOC_CTE = """ucooc AS (
 def q_cf_user_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I8: UserCF cosine similarity — symmetric to I4 on the user axis.
 
-    Self-join on item_id; hot items are the pair-explosion source, so since
-    round 7 the join sides ride audience_capped (MAX_ITEM_AUDIENCE — capped
+    Self-join on item_id; hot items are the pair-explosion source, so the
+    join sides ride audience_capped (MAX_ITEM_AUDIENCE — capped
     == uncapped at every tested SF, so the oracle stays exact; at the sf1
     probe's 10x audiences the cap bounds the c^2 pair growth). Norms stay
     full-history. AQE skew split handles the residue."""
@@ -863,7 +863,7 @@ def _capped_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def history_capped_edges(first_seen: DataFrame, cap: int = MAX_USER_HISTORY) -> DataFrame:
     """First-seen edge table with per-user history capped to the `cap`
     EARLIEST (m, i) edges — the hot-user pair guard for the incremental
-    co-occurrence self-join (r8, the duplicate-mass-cap precedent). Earliest
+    co-occurrence self-join (the duplicate-mass-cap precedent). Earliest
     first matches the incremental contract: a standing capped history admits
     new edges only while under budget, so old/new flags survive the cap
     unchanged. At every tested SF no user's distinct-item history reaches
@@ -913,7 +913,7 @@ def q_cf_incremental_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between "similarity refresh touches
     yesterday's orders" and "similarity refresh re-reads years of history"
     (same maintenance contract as q_incr_agg, for a SELF-JOIN aggregate).
-    Since r8 the edge table rides history_capped_edges (MAX_USER_HISTORY
+    The edge table rides history_capped_edges (MAX_USER_HISTORY
     earliest edges per user — capped == uncapped at every tested SF, so the
     from-scratch oracle stays exact), bounding per-user pair mass at cap²
     no matter how deep a whale user's history runs — the same engineered
@@ -928,7 +928,7 @@ def q_cf_incremental_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are the four flag slices of a single grouped intermediate. The
     original form ran pairs() four times (4 joins + 4 aggregates + a
     3-way union); under a default-conf 1 GiB-heap session that plan sat on
-    the OOM edge (observed: the r5 replay lost tasks to Java-heap OOM at
+    the OOM edge (observed: a sweep replay lost tasks to Java-heap OOM at
     this query after 22 prior window entries had warmed the heap, while
     the identical prefix passed on the 194-entry tree — marginal, not
     deterministic). One join + one aggregate is ~4x less shuffle I/O and
@@ -939,7 +939,7 @@ def q_cf_incremental_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = edges.select("u", F.col("i").alias("pi"), F.col("is_new").alias("a_new"))
     b = edges.select("u", F.col("i").alias("pj"), F.col("is_new").alias("b_new"))
-    # r8 optimization (guide §2.4): the pair table is ~26M nearly-unique
+    # The pair table is ~26M nearly-unique
     # (i,j) rows, so the un-aligned shape exchanged it TWICE — the flags
     # aggregate's partial-agg output (hash(i,j,a_new,b_new)) could not be
     # reused by the (i,j) merge aggregate, which re-exchanged all 26M rows
@@ -1033,7 +1033,7 @@ RULE_MIN_COUNT = 5
 RULE_TOP = 25
 # Relative support floor in parts-per-million of n_baskets. Canonical
 # Apriori min-support is a basket FRACTION; a count-only floor lets the
-# frequent-pair set grow with the corpus (round-7 sf1 probe: 22.9x
+# frequent-pair set grow with the corpus (the sf1 probe measured 22.9x
 # wall-clock for 10x data as 10x co-counts cleared the absolute floor).
 # The effective floor is max(RULE_MIN_COUNT, ceil(ppm * n_baskets / 1e6)),
 # computed in exact integer arithmetic on both engines; 33 ppm makes the
@@ -1088,13 +1088,13 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     table size), marginals broadcast, and the top-25 is rank-pruned. The
     support floor is RELATIVE (RULE_MIN_SUPPORT_PPM of n_baskets, integer
     ceil-div on both engines, never below the absolute RULE_MIN_COUNT) —
-    a count-only floor lets the frequent set grow with the corpus (round-7
+    a count-only floor lets the frequent set grow with the corpus (the
     sf1 probe measured 22.9x for 10x data before this fix; identical
     output at every tested SF by construction)."""
     # spread the single-split lineitem scan: the basket subtree is
     # re-derived for BOTH pair-join sides, and each rescan's partial
     # distinct otherwise runs on one task (two ~16 s 1-task stages at
-    # sf0.1, plans/r08/q_assoc_rules_*). Identity at cluster scale.
+    # sf0.1). Identity at cluster scale.
     basket = (
         spread(spark, table(spark, sf_dir, "lineitem"))
         .select(F.col("l_orderkey").alias("b"), F.col("l_partkey").alias("i"))

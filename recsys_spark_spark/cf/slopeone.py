@@ -65,8 +65,8 @@ def deviation_pairs(ui: DataFrame) -> DataFrame:
             F.sum(F.col("r_j") - F.col("r_i")).alias("dsum_ji"),
         )
     )
-    # r8 optimization (guide §2.4; the itemcf.symmetrize rationale applied
-    # here): the fwd/rev self-UNION evaluated the whole `half` subtree —
+    # The itemcf.symmetrize rationale applies here: the fwd/rev self-UNION
+    # evaluated the whole `half` subtree —
     # user-keyed self-join plus the 13.1M-row (i,j) aggregate exchange —
     # once per branch (measured: two identical 126.2 MB / 13,127,405-row
     # shuffle writes at sf0.1; AQE compiles the union branches separately,

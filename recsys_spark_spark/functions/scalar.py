@@ -117,7 +117,7 @@ FROM lineitem
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H4: math functions — the CF cosine/IUF building blocks (sqrt, ln).
 
-    r9 examined, deliberately left (SF1_TAIL_PROBE): spread() was tried and
+    Examined in the sf1 probe and deliberately left: spread() was tried and
     REVERTED on measurement — sf1 noop 7.5 -> 7.3 s (a wash: the keyless
     repartition's sort-before-repartition of 6M rows costs what the widened
     projection saves; rounded math expressions are too cheap per row). The

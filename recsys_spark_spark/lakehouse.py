@@ -1,6 +1,6 @@
 """Transaction-log-lite: a minimal multi-version parquet table format.
 
-VERDICT r4 "What's missing" #4: at 100 TB a real pipeline MERGEs into
+At 100 TB a real pipeline MERGEs into
 Delta/Iceberg; neither ships in this container, so this module implements
 the ESSENTIAL mechanism those formats share — an append-only commit log of
 file-level add/remove actions over immutable parquet data files — small

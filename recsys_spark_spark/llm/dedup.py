@@ -531,7 +531,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(token) as a 32-bit integer. Near-dup docs then differ in few bits
     (hamming distance over simhash16 — a bucket-join key at scale).
 
-    SF1_TAIL_PROBE (guide §2.6/§1.2): the tokenize+md5 fan-out is pure
+    sf1 probe: the tokenize+md5 fan-out is pure
     per-row CPU bound to the single-row-group scan's 1-2 tasks (sf1 noop
     15.4 s, 9.9× for 10× data on a 32-core session) — spread() round-robins
     the doc scan across the session first; identity at scale (guarded).
@@ -1405,8 +1405,7 @@ def q_sim_setjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive all-pairs join in tests/test_new_ops_worked.py)."""
     # spread the single-split corpus scan BEFORE tokenize + the class-key
     # md5: six 1-task stages totalling ~60 s at sf0.1 re-derived this
-    # subtree single-threaded (plans/r08/q_sim_setjoin_prefix_*). Identity
-    # at cluster scale (see catalog.spread).
+    # subtree single-threaded. Identity at cluster scale (see catalog.spread).
     d = spread(spark, table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
@@ -1611,7 +1610,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the single-split corpus scan BEFORE tokenize+md5: the class-key
     # hash runs per doc in every branch that re-derives `docs`, and on one
     # task it serializes (seven 1-task stages, ~45 s task time measured at
-    # sf0.1 — plans/r08/q_dedup_containment_*). Identity at cluster scale.
+    # sf0.1). Identity at cluster scale.
     d = spread(spark, table(spark, sf_dir, "documents"))
     docs = d.select(
         "doc_id",

@@ -69,7 +69,7 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     a row-local expression, so featurization is a map over the joined
     fact, and the only exchange is the orders⋈customer key join (which a
     bucketed layout removes, q_join_bucketed)."""
-    # r9 (SF1_TAIL_PROBE, guide §2.6): 3 md5+conv per row on a 1-4-task
+    # sf1 probe: 3 md5+conv per row on a 1-4-task
     # scan measured 8.9 s / 15.6× at sf1 — spread() the fact side across
     # the session before the broadcast join; identity at scale (guarded).
     o = spread(

@@ -81,7 +81,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-up rows), emitting dims and exact per-channel means.
 
     Means are computed as integer sums over uint8 pixels divided once
-    (exact int64 arithmetic, one deterministic double division, round 6) —
+    (exact int64 arithmetic, one deterministic double division) —
     the same determinism discipline as the SQL paths. At scale: repartition
     by a size-balancing key first so decode batches are even."""
 
@@ -219,7 +219,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    # r9 (SF1_TAIL_PROBE, guide §2.6/§4): the decode→resample→re-encode
+    # sf1 probe: the decode→resample→re-encode
     # pass is per-row CPU bound to the single-row-group scan's 1-2 tasks
     # (sf1 noop 2.2 s / 5.9x on 32 cores) — spread() the projected scan so
     # the Python workers run wide; identity at scale (guarded). Still

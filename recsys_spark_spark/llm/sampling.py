@@ -563,7 +563,7 @@ def q_sample_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with map-side partials; integer num/den keep each estimate
     insertion-order independent.
 
-    r9 (SF1_TAIL_PROBE, guide §2.6/§1.2): the 20x explode + per-copy md5
+    sf1 probe: the 20x explode + per-copy md5
     is pure per-row CPU bound to the single-row-group scan's 1-4 tasks
     (sf1 noop 26.1 s / 7.4x on a 32-core session) — spread() the base scan
     first; identity at scale (guarded), and the content-addressed weights

@@ -805,7 +805,7 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the bigram table is the shuffle, exactly the n-gram-count
     pipeline shape, never per-doc state.
 
-    r9 (SF1_TAIL_PROBE, guide §2.6): the tokenize/bigram explodes are
+    sf1 probe: the tokenize/bigram explodes are
     per-row CPU bound to the single-row-group scan's 1-2 tasks (sf1 noop
     5.2 s / 6.1x on 32 cores) — spread() the doc scan once for both
     branches; identity at scale (guarded), sums are nano-rounded integers
@@ -1205,7 +1205,7 @@ def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (K scans of 100 TB instead of one)."""
     # spread the single-split corpus scan: the regexp tokenize + explode
     # otherwise runs the whole corpus on one task (an 85 s cold 1-task
-    # stage at sf0.1 — plans/r08/q_text_bpe_train_*). Identity at
+    # stage at sf0.1). Identity at
     # cluster scale (see catalog.spread).
     d = spread(spark, table(spark, sf_dir, "documents"))
     return (

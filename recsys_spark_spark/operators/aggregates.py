@@ -447,8 +447,8 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered by (price, orderkey) so bin boundaries are total-order
     deterministic even across duplicate prices.
 
-    Exact NTILE semantics WITHOUT a single-partition window (round-5
-    rewrite): the global position comes from the distributed
+    Exact NTILE semantics WITHOUT a single-partition window: the global
+    position comes from the distributed
     operators.sorts.global_rank (value-bucketed windows), and the bin is
     SQL NTILE's exact arithmetic over (pos, n) — the first n % k buckets
     get ⌈n/k⌉ rows, the rest ⌊n/k⌋:
@@ -457,7 +457,7 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             = r + ⌈(pos − r·(q+1))/q⌉         otherwise
     n arrives as a 1-row broadcast. The previous unpartitioned-NTILE form
     (this oracle) is now only the semantics statement, not the plan."""
-    # r8 optimization: spread the single-split orders scan — global_rank
+    # spread the single-split orders scan — global_rank
     # derives several chained passes from it and every one inherited the
     # scan's ONE task (measured: eleven 1-task stages, 18 s task time with
     # ~5 s single-core stretches at sf0.1). Identity at cluster scale
@@ -548,7 +548,7 @@ def q_agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion, then evaluate the identical expression tree — NOT because
     the products fit in 2^53 (at sf1, n·Sxx ≈ 1.5e16 already exceeds
     2^53, so the conversion rounds; it just rounds identically on both
-    sides — r5 ADVICE correction). The /100 rescales the percent scaling
+    sides). The /100 rescales the percent scaling
     back to the raw unit.
     Scale shape: one map-side-combinable aggregate per flag — the moment
     vector is 6 longs per group, perfectly mergeable (the same

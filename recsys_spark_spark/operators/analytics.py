@@ -1,4 +1,4 @@
-"""3.M analytics extensions (round 4) — the product-analytics layer a
+"""3.M analytics extensions — the product-analytics layer a
 recommender deployment runs beside the CF pipeline: cohort retention, event
 funnels, value histograms, item-transition mining, and graph ranking over
 the item co-occurrence graph.
@@ -253,7 +253,7 @@ PR_TOP = 20
 # MATERIALIZED is load-bearing at sf>=0.1: DuckDB inlines plain CTEs, so the
 # ~20M-row edge self-join would be recomputed inside every unrolled
 # iteration (6x the work and enough temp spill to fill the disk — observed
-# as an IOException during the r4 sf0.1 sweep). Materializing pins each
+# as an IOException during an sf0.1 sweep). Materializing pins each
 # building block to one evaluation; results are identical.
 _PR_EDGES_SQL = """
 ui AS MATERIALIZED (
@@ -323,7 +323,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar."""
     import math
 
-    edges = _pr_edges(spark, sf_dir)
+    edges = _eig_edges(spark, sf_dir).select("src", "dst")
     # deg is node-sized but derives from an aggregate, so without
     # materialization every downstream reference re-aggregated the cached
     # 25.4M-row edge table; checkpointed once, every iteration reads the
@@ -387,28 +387,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rnk",
         )
     )
-
-
-@memo
-def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct directed co-purchase edges (src, dst), persisted: they feed
-    deg, the deg.count() action and every PageRank contribution join."""
-    # Build from the CAPPED interaction matrix (itemcf.MAX_USER_HISTORY):
-    # a hot user contributes O(history²) pairs to the self-join, so the
-    # uncapped matrix is the 100×-scale blow-up the flagship already
-    # guards against. At every test SF no user exceeds the cap
-    # (pytest-pinned in tests/test_plans.py), so capped ≡ uncapped and
-    # the UNCAPPED SQL oracle stays exact. Bonus: the persisted matrix
-    # is shared with the whole CF family instead of re-scanning
-    # orders⋈lineitem here.
-    from recsys_spark_spark.cf.itemcf import capped_interactions
-
-    ui = capped_interactions(spark, sf_dir).select(
-        F.col("user_id").alias("u"), F.col("item_id").alias("i")
-    )
-    a = ui.select("u", F.col("i").alias("src"))
-    b = ui.select("u", F.col("i").alias("dst"))
-    return a.join(b, "u").where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
 
 
 # --------------------------------------------------------------------------
@@ -1421,7 +1399,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's string_agg orders by (ts, event_id) only; the two agree
     # because event_id is UNIQUE (asserted per fixture in
     # tests/test_new_ops_worked.py::test_event_id_unique_on_fixtures), so
-    # comparison never reaches the trailing event_type field (r5 ADVICE).
+    # comparison never reaches the trailing event_type field.
     paths = numbered.groupBy("user_id", "session_id").agg(
         F.expr(
             "array_join(slice(transform(array_sort(collect_list(struct(ts, event_id, event_type))),"
@@ -1716,14 +1694,21 @@ EIG_ITERS = 3
 EIG_SCALE = 1e6  # per-iteration integer quantization of the unit vector
 EIG_TOP = 20
 
+
 @memo
 def _eig_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEIGHTED co-occurrence edges (src, dst, c). PageRank's edge table is
-    the unweighted distinct-pair projection of this one, kept separate
-    because its iteration divides by outdegree, not weight."""
-    # Capped matrix for the same reasons as _pr_edges (cap ≡ uncapped at
-    # test SFs, pytest-pinned; bounds the O(history²) pair blow-up and
-    # shares the persisted CF matrix instead of a second scan+join).
+    """WEIGHTED co-occurrence edges (src, dst, c), persisted: one memo for
+    the centrality keys. Its (src, dst) projection is exactly the distinct
+    directed co-purchase edge set, which PageRank and the degree profile
+    read (the weight c stays eigencentrality's)."""
+    # Build from the CAPPED interaction matrix (itemcf.MAX_USER_HISTORY):
+    # a hot user contributes O(history²) pairs to the self-join, so the
+    # uncapped matrix is the 100×-scale blow-up the flagship already
+    # guards against. At every test SF no user exceeds the cap
+    # (pytest-pinned in tests/test_cf_property.py), so capped ≡ uncapped
+    # and the UNCAPPED SQL oracles stay exact. The persisted matrix is
+    # shared with the whole CF family instead of re-scanning
+    # orders⋈lineitem here.
     from recsys_spark_spark.cf.itemcf import capped_interactions
 
     ui = capped_interactions(spark, sf_dir).select(
@@ -1989,11 +1974,12 @@ def q_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join?). Directly instruments the skew the capped edge builders
     guard against: the max-degree row IS the blow-up bound.
 
-    Shape: reuses the persisted _pr_edges table (zero extra scans in a
-    session that also ran PageRank), one src-keyed count, one degree-keyed
+    Shape: reuses the persisted _eig_edges table (zero extra scans in a
+    session that also ran PageRank or eigencentrality), one src-keyed
+    count, one degree-keyed
     count — output is distinct-degree-sized, orders of magnitude below
     node count. Exact integers throughout."""
-    edges = _pr_edges(spark, sf_dir)
+    edges = _eig_edges(spark, sf_dir).select("src", "dst")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     return deg.groupBy(F.col("outdeg").cast("long").alias("degree")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")

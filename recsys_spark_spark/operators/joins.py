@@ -378,7 +378,7 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Band width is a pure performance knob (results are width-invariant —
     pinned by tests/test_interval_band.py) and must sit at the SESSION
-    LENGTH scale, not a calendar unit: with hour bands the r7 sf1 probe
+    LENGTH scale, not a calendar unit: with hour bands the sf1 probe
     measured 42x more candidates than true overlaps (6.48M vs 154k at
     sf0.1; 652M vs 19.6M at the sf1 replica) because sessions average 43 s
     (p99 ~24 min), so nearly everything sharing an hour does NOT overlap in
@@ -389,7 +389,7 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is genuine output, not join waste; the band join rides it sublinearly.
     The oracle states the same result via the plain quadratic join (DuckDB
     IEJoin handles sf-test sizes)."""
-    # r8 (guide §2.6): explicit width on the sessionize exchange — the
+    # Explicit width on the sessionize exchange — the
     # events table is a single-row-group file and the ~1.4 MB user_id
     # exchange AQE-coalesces to ONE partition, so the whole
     # sessionize → interval → band-explode → overlap-probe chain ran
@@ -500,7 +500,7 @@ def q_join_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part is one small parquet split, so without an exchange the broadcast
     # join's stream side — and with it EVERY candidate's Levenshtein verify
     # — runs in a single task (measured 44 s of 45 s query CPU in one
-    # 1-task stage at sf0.1, plans/r08/q_join_fuzzy_*). The verify work
+    # 1-task stage at sf0.1). The verify work
     # scales with candidate pairs, not input bytes, which scan splitting
     # cannot see. catalog.spread round-robins the probe side across the
     # session's parallelism (identity on an already-parallel scan at

@@ -1,4 +1,4 @@
-"""3.M statistical testing & drift monitoring (round 5) — the inference
+"""3.M statistical testing & drift monitoring — the inference
 layer an analytics deployment runs on top of the aggregates: two-sample
 tests (Welch's t), independence tests (chi-square), distribution-drift
 scores (PSI), inequality/concentration measures (Gini), and
@@ -1305,8 +1305,8 @@ def q_feature_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whitening/PCA/feature-selection precursor: which measures move
     together, computed without ever sampling to a notebook.
 
-    Exactness — REBUILT in round 7 after this key's driver red row
-    (CORRECTNESS_r06: hash_match=false with every local check green).
+    Exactness — REBUILT after this key failed its driver hash check
+    (hash_match=false with every local check green).
     Root cause, reproduced locally: the old form emitted the 2dp/6dp
     display values through DOUBLE closed forms rounded by DuckDB
     ROUND(double) — which returns **-0.0** for tiny negatives (e.g.

@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from recsys_spark_spark.catalog import memo, table
 from recsys_spark_spark.functions.determinism import dround, rlong
 from recsys_spark_spark.registry import query
+from recsys_spark_spark.streaming.streams import SESSION_GAP_S
 
 
 @query(
@@ -391,8 +392,6 @@ def q_incr_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M96: batch gap-sessionization (30-minute inactivity boundary)
 # --------------------------------------------------------------------------
 
-SESSION_GAP_S = 1800  # 30-minute inactivity closes a session
-
 
 @query(
     "q_sessionize_batch",
@@ -404,7 +403,7 @@ WITH ordered AS (
 ), flagged AS (
   SELECT user_id, ts, event_id, value,
          CASE WHEN prev_ts IS NULL
-                OR date_diff('second', prev_ts, ts) > {SESSION_GAP_S}
+                OR date_diff('second', prev_ts, ts) >= {SESSION_GAP_S}
               THEN 1 ELSE 0 END AS new_s
   FROM ordered
 ), numbered AS (
@@ -425,8 +424,9 @@ GROUP BY 1, 2
 def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M96: batch sessionization by inactivity gap — the gaps-and-islands
     form of what q_stream_session does with session_window: a session
-    boundary opens wherever a user's gap to the previous event exceeds
-    SESSION_GAP_S, sessions are numbered per user by a running sum of
+    boundary opens wherever a user's gap to the previous event, in whole
+    seconds, is SESSION_GAP_S or more (the streams.py session contract),
+    sessions are numbered per user by a running sum of
     boundary flags, then one aggregation emits per-session span/volume.
 
     This is the BATCH twin with *event-chain* semantics (a session extends
@@ -445,7 +445,7 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nested expression — same single exchange (identical window spec), but
     # no reliance on the analyzer's nested-window extraction
     flagged = e.withColumn(
-        "_new_s", F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
+        "_new_s", F.when(gap.isNull() | (gap >= SESSION_GAP_S), 1).otherwise(0)
     )
     numbered = flagged.withColumn(
         "session_id",
@@ -1828,7 +1828,7 @@ def q_ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").cast("long").alias("q"))
     )
 
-    # r8 optimization (guide §4.1/§4.5): the original
+    # The original
     # d.groupBy("part").applyInPandas(...) invoked the Python function once
     # per part — ~20k tiny Arrow batches, each paying pandas
     # DataFrame/sort/to_datetime construction (measured 12 ms/part: a

@@ -145,7 +145,7 @@ WINDOW ord AS (ORDER BY c_acctbal, c_custkey)
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5: distribution functions over account balance.
 
-    Round-5 rewrite: no unpartitioned window. The (c_acctbal, c_custkey)
+    No unpartitioned window. The (c_acctbal, c_custkey)
     ordering is a TOTAL order (custkey unique → no peer groups), so every
     distribution function is a closed form of the distributed global rank
     (operators.sorts.global_rank) and the 1-row broadcast count n:

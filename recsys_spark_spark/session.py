@@ -80,7 +80,7 @@ def get_spark(
     )
     # getOrCreate() returns any PRE-EXISTING session, silently ignoring every
     # builder conf above for STATIC/core confs — a probe that expected an 8g
-    # maxResultSize could be running with the 1g default (ADVICE r7). Static
+    # maxResultSize could be running with the 1g default. Static
     # confs can't be fixed up after the fact, so fail loudly instead of
     # measuring under the wrong limits. Read back from the SparkContext conf
     # (the launch-time truth), NOT spark.conf: getOrCreate copies builder

@@ -195,7 +195,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     key drops; the injected-late-row pytest (tests/test_streaming.py) covers
     the real engine behavior.
 
-    The global prefix max is DISTRIBUTED (round-5 rewrite, no unpartitioned
+    The global prefix max is DISTRIBUTED (no unpartitioned
     window): arrival order is value-bucketed on event_id
     (operators.sorts.value_buckets — the same primitive as global_rank),
     the running max runs per bucket, and each bucket's carry-in is the max

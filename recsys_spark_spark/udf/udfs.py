@@ -65,12 +65,12 @@ def q_udf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     def net_price(price: pd.Series, discount: pd.Series) -> pd.Series:
         return price * (1 - discount)
 
-    # r9 examined, deliberately left (SF1_TAIL_PROBE): spread() was tried
+    # Examined in the sf1 probe and deliberately left: spread() was tried
     # and REVERTED on measurement — the keyless repartition's
     # sort-before-repartition of 6M rows cost 3x more than the widened
     # ArrowEval saved (sf1 noop 2.5 s -> 7.1 s), because the UDF body is
     # one vectorized multiply: too cheap to buy parallelism with a shuffle
-    # (guide §1.2 — fix per-task work only when it dominates). The 5.6x
+    # (fix per-task work only when it dominates). The 5.6x
     # sf1 noop ratio is row-mass-linear Arrow transport, the declared
     # surface of this query.
     l = table(spark, sf_dir, "lineitem")
@@ -149,7 +149,7 @@ def q_udtf_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    # r8 optimization (guide §2.5/§4): AQE's byte-based partition coalescing
+    # AQE's byte-based partition coalescing
     # shrank the 2.9 MB pre-group exchange to TWO partitions, so all ~15k
     # per-customer Python invocations ran through two workers sequentially
     # (measured: a 2-task stage, 34.7 s task time, 1.1 s executor CPU — the

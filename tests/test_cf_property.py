@@ -211,15 +211,15 @@ def test_connected_components_round_is_one_checkpoint(spark, monkeypatch):
     ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"],
 )
 def test_user_history_below_cap_on_fixtures(spark, sf_dir):
-    """The CF oracles — and, since round 6, the graph edge builders behind
-    q_graph_pagerank / q_graph_eigencentrality (analytics._pr_edges /
-    _eig_edges, both built from capped_interactions), and since round 8 the
+    """The CF oracles — and the centrality edge memo behind
+    q_graph_pagerank / q_graph_degree_stats / q_graph_eigencentrality
+    (analytics._eig_edges, built from capped_interactions), and the
     history_capped_edges pair guard inside q_cf_incremental_cooc — assume
     capped == uncapped interactions, which holds only while no user's
     distinct item count reaches MAX_USER_HISTORY. Guard that assumption per
     fixture — at EVERY oracle-compared SF — so a regenerated/denser testdata
     set fails loudly here instead of silently diverging from the uncapped
-    SQL oracles (ADVICE round 3; sf0.1 added round 8)."""
+    SQL oracles."""
     from pyspark.sql import functions as F
 
     ui = itemcf.interactions(spark, sf_dir)

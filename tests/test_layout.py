@@ -15,7 +15,7 @@ from recsys_spark_spark.llm.sampling import STRAT_PCT
 from recsys_spark_spark.registry import load_all
 from tests.conftest import SF_SMOKE
 
-QUERIES, _ = load_all()
+QUERIES, ORACLES = load_all()
 
 
 def test_zorder_tightens_both_envelopes(spark):
@@ -111,9 +111,9 @@ def test_stratified_sample_exact_quota(spark):
 
 
 def test_sessionize_gap_law(spark):
-    """Within a session consecutive events are <= GAP apart; across
-    consecutive sessions of the same user the start is > GAP after the
-    previous session's end."""
+    """Within a session consecutive events are < GAP apart; across
+    consecutive sessions of the same user the start is >= GAP after the
+    previous session's end (whole seconds, the streams.py session rule)."""
     sess = sorted(
         QUERIES["q_sessionize_batch"](spark, SF_SMOKE).collect(),
         key=lambda r: (r.user_id, r.session_id),
@@ -123,10 +123,54 @@ def test_sessionize_gap_law(spark):
         if a.user_id != b.user_id:
             continue
         assert b.session_id == a.session_id + 1
-        assert b.start_s - a.end_s > SESSION_GAP_S, (a, b)
+        assert b.start_s - a.end_s >= SESSION_GAP_S, (a, b)
     # event counts fold back to the full table
     n_events = sum(r.n_events for r in sess)
     assert n_events == table(spark, SF_SMOKE, "events").count()
+
+
+def test_sessionize_gap_boundary_starts_new_session(spark, tmp_path):
+    """One user, consecutive gaps of 1799 s, 1800 s and 1801 s: a gap of
+    exactly SESSION_GAP_S starts a new session, as in q_stream_session, so
+    the sessions are {e0, e1}, {e2} and {e3} — in the builder and in its
+    DuckDB oracle."""
+    import calendar
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 6, 22, 16, 14)
+    offsets = [0, 1799, 1799 + 1800, 1799 + 1800 + 1801]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(4), pa.int64()),
+                "ts": pa.array(
+                    [t0 + datetime.timedelta(seconds=o) for o in offsets],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([511] * 4, pa.int64()),
+                "event_type": ["click"] * 4,
+                "value": [1.0] * 4,
+                "props": ["{}"] * 4,
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    s0 = calendar.timegm(t0.timetuple())
+    # (user_id, session_id, start_s, end_s, n_events, value_cents)
+    want = [
+        (511, 1, s0, s0 + 1799, 2, 200),
+        (511, 2, s0 + offsets[2], s0 + offsets[2], 1, 100),
+        (511, 3, s0 + offsets[3], s0 + offsets[3], 1, 100),
+    ]
+    got = QUERIES["q_sessionize_batch"](spark, str(tmp_path)).collect()
+    assert sorted(tuple(r) for r in got) == want
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    assert sorted(con.execute(ORACLES["q_sessionize_batch"]).fetchall()) == want
 
 
 def test_decile_lift_laws(spark):

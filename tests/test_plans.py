@@ -328,11 +328,10 @@ def test_item_transitions_topk_avoids_global_sort(spark):
 
 
 def test_pagerank_reuses_persisted_edges(spark):
-    """Since the r8 optimization each q_graph_pagerank iteration joins the
-    persisted edge list against BROADCAST node-sized state and
-    localCheckpoints the result, so per-iteration work runs eagerly in
-    node-sized jobs (the edge table is scanned in place, never shuffled —
-    plans/r08/q_graph_pagerank_{before,after}.txt) and the final plan must
+    """Each q_graph_pagerank iteration joins the persisted edge list against
+    BROADCAST node-sized state and localCheckpoints the result, so
+    per-iteration work runs eagerly in node-sized jobs (the edge table is
+    scanned in place, never shuffled) and the final plan must
     read the checkpointed rank vector — a Scan ExistingRDD, NOT a replay of
     the user-keyed self-join lineage (the before-plan was 369 KB of
     duplicated co-occurrence subtrees; any join operator reappearing in the

@@ -1,10 +1,10 @@
-"""One-off sf1 scale probe (VERDICT round 3 #5): measure, don't extrapolate.
+"""sf1 scale probe: measure, don't extrapolate.
 
 Builds a 10x replica of /root/testdata/sf0.1 (disjoint user/order/doc/vec key
 ranges per copy, shared item catalog — "10x the users, same catalog", which
 makes co-occurrence denser, the adversarial direction for the CF flagship),
-then runs the flagship + the most expensive headline queries at BOTH sf0.1
-and sf1 in one session and diffs their physical plan shapes.
+then runs each key at BOTH sf0.1 and sf1 in one session and diffs their
+physical plan shapes.
 
 What "scales" means here, concretely:
 - wall-time grows sub-linearly vs the 10x data (fixed cost amortizes, cores
@@ -13,9 +13,20 @@ What "scales" means here, concretely:
   AQE demotion of a broadcast to sort-merge, no new shuffle appearing only
   at the larger size.
 
-Usage: python tools/sf1_probe.py [--out SF1_PROBE.json]
-The generated replica lives in /tmp/sf1_probe_data (regenerated only if its
-_SUCCESS marker is missing). Results feed BASELINE.md's "sf1 probe" section.
+Each key is timed with bench.run_one under both actions, the minimum of 2
+runs each: the noop sink (every row computed distributed, none crosses to the
+driver: engine time) and toPandas (engine time + Arrow materialization of the
+full result). A key whose noop ratio stays low while its toPandas ratio is
+~10x pays for an output that is itself 10x larger, not for a scaling defect.
+A failed toPandas (a full-matrix output can exceed any driver result cap) is
+recorded as the key's ``collect_error``; its noop numbers are kept.
+
+Usage: python tools/sf1_probe.py --out FILE [name ...]
+With no names every registered key is probed, in registry order. One entry
+per key is written to FILE as soon as the key finishes; keys already in FILE
+are skipped, so a killed probe resumes by rerunning the same command. The
+replica lives in /tmp/sf1_probe_data (regenerated only if its _SUCCESS marker
+is missing).
 """
 
 from __future__ import annotations
@@ -27,16 +38,19 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import run_one  # noqa: E402
 from recsys_spark_spark.registry import load_all  # noqa: E402
 from recsys_spark_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/sf1_probe_data"
 COPIES = 10
+RUNS = 2
 # key offsets chosen above every sf0.1 max key (orderkey<~1.6M, custkey<150k,
 # event_id<100k, user_id<15k, doc_id<5k, vec_id<2k)
 OFF = {
@@ -47,117 +61,10 @@ OFF = {
     "doc_id": 1_000_000,
     "vec_id": 1_000_000,
 }
-
-PROBE_QUERIES = (
-    "q_cf_recommend",
-    "q_join_multiway",
-    "q_topk_per_group",
-    "q_text_tfidf",
-    "q_sim_cosine_knn",
-    "q_agg_groupby",
-    # round-5 additions (VERDICT r4 #6): the new heavy operators —
-    # banded minhash, interval join, iterative pagerank, DAU/WAU explode,
-    # plus the round-5 distributed global rank and gap sessionization
-    "q_dedup_minhash_exact",
-    "q_join_interval",
-    "q_graph_pagerank",
-    "q_active_users",
-    "q_sort_multi",
-    "q_sessionize_batch",
-    # round-5 session additions: the new pair-join recommender, the
-    # densifying co-purchase triangle join (the adversarial query under
-    # "10x users, same catalog" — support multiplies, edges densify),
-    # the broadcast-seed k-means step, and the 20x bootstrap fan-out
-    "q_cf_slope_one",
-    "q_kmeans_step",
-    "q_sample_bootstrap",
-    "q_graph_triangles",
-    # round-5 continuation additions: the densifying wedge join (link
-    # prediction — same adversarial direction as triangles), the triple
-    # distributed global rank (RFM), the distributed prefix sums (Pareto
-    # cut + both KS ECDFs), the window-bounded attribution range join,
-    # and the months^2 pair scan that must stay calendar-bounded flat
-    "q_graph_jaccard",
-    "q_rfm_segmentation",
-    "q_part_abc",
-    "q_stat_ks",
-    "q_attribution_position",
-    "q_stat_mann_kendall",
-    # round-5 final-session additions: the restructured one-join
-    # incremental co-occurrence (densifying, like triangles), the
-    # sweep-line concurrency + rank prefix sums (bucket-offset primitive
-    # under 10x), the K-pass Newton trainer, the iterative normalized
-    # power iteration (densifying weighted edges), and the user-window
-    # pattern/streak/asof chains
-    "q_cf_incremental_cooc",
-    "q_interval_concurrency",
-    "q_stat_mannwhitney",
-    "q_glm_logistic_newton",
-    "q_graph_eigencentrality",
-    "q_ts_decompose",
-    "q_activity_streaks",
-    "q_join_asof_nearest",
-    "q_pattern_rising_runs",
-    "q_feature_covariance",
-    # round-6 additions (VERDICT r5 #6): the heavy never-probed operators —
-    # the full survival curve (global event-time prefix products), the
-    # 3-way feature-store composition, the source-pair contamination join,
-    # the lakehouse merge/time-travel write paths, plus this round's new
-    # queries and the post-fix eigencentrality re-entry
-    "q_survival_km",
-    "q_feature_store",
-    "q_dedup_contamination",
-    "q_sink_merge",
-    "q_table_time_travel",
-    "q_ts_changepoint",
-    "q_stat_linreg_multi",
-    "q_graph_degree_stats",
-    "q_dq_kanonymity",
-    "q_stat_theilsen",
-    "q_cf_baseline_bias",
-    # round-6 late-session additions: token-linear span explodes (the two
-    # decontamination ops), the bitmap distinct rollup, the distributed
-    # prefix-max lateness profile, the applyInPandas Holt fold, the
-    # stream-static enrich and chained-agg batch twins, schema evolution,
-    # and the XML round-trip
-    "q_text_span_dedup",
-    "q_text_contamination_ngram",
-    "q_agg_bitmap_distinct",
-    "q_dq_lateness_profile",
-    "q_ts_holt",
-    "q_stream_enrich",
-    "q_stream_chained",
-    "q_table_schema_evolution",
-    "q_source_xml",
-    "q_sql_group_by_all",
-    # round-6 continuation-session additions: the star-contraction
-    # component labeler (densifying edges, triangle direction), the
-    # vocabulary-sized BPE merge chain + corpus tokenization join, the
-    # prefix-filtered set-similarity self-join (exact-duplicate copies
-    # across replicas make this the worst-case dup-pair direction), the
-    # fixed-grid CMS sketch, the broadcast ADC scan, corpus RAKE, and the
-    # two new sequential folds
-    "q_graph_components",
-    "q_text_bpe_train",
-    "q_text_bpe_encode",
-    "q_sim_setjoin_prefix",
-    "q_cms_heavy_hitters",
-    "q_sim_pq_adc",
-    "q_text_rake",
-    "q_stat_friedman",
-    "q_ts_holt_winters",
-    "q_stat_spearman",
-    "q_stat_kruskal",
-    # late round-6 additions: the capped user-pair Swing joins (the
-    # query whose whole design is the 10x-users containment story), the
-    # frontier BFS, the paired-rank window chain, and the light API/eval
-    # queries for completeness
-    "q_cf_swing",
-    "q_graph_khop",
-    "q_stat_wilcoxon",
-    "q_stream_cms",
-    "q_eval_calibration",
-    "q_observe_metrics",
+PLAN_OPS = (
+    "Exchange", "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "HashAggregate", "Window", "Sort",
+    "TakeOrderedAndProject", "WindowGroupLimit",
 )
 
 
@@ -189,128 +96,78 @@ def generate(spark) -> None:
 
 
 def plan_digest(df) -> dict:
-    """Operator-shape summary of the formatted physical plan — the properties
-    that must NOT change between sf0.1 and sf1."""
+    """Operator counts of the formatted physical plan — the properties that
+    must NOT change between sf0.1 and sf1."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    ops = re.findall(r"^\s*[*+\-:]*\s*\(?\d*\)?\s*([A-Za-z]+[A-Za-z ]*?)\s*(?:\(|$)", plan, re.M)
-    counts = {}
-    for key in ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-                "BroadcastNestedLoopJoin", "HashAggregate", "Window", "Sort",
-                "TakeOrderedAndProject", "WindowGroupLimit"):
-        counts[key] = len(re.findall(rf"\b{key}\b", plan))
-    return counts
+    return {op: len(re.findall(rf"\b{op}\b", plan)) for op in PLAN_OPS}
+
+
+def ratio(d: dict) -> float | None:
+    return round(d["sf1"] / d["sf0.1"], 2) if d.get("sf0.1") and "sf1" in d else None
+
+
+def probe(spark, fn) -> dict:
+    entry: dict = {"plan": {}, "noop_sec": {}, "collect_sec": {}, "rows": {}}
+    for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
+        entry["plan"][label] = plan_digest(fn(spark, sf_dir))  # untimed
+        entry["noop_sec"][label] = round(
+            min(run_one(spark, fn, sf_dir, "noop")[0] for _ in range(RUNS)), 2
+        )
+        if "collect_error" in entry:
+            continue
+        try:
+            runs = [run_one(spark, fn, sf_dir) for _ in range(RUNS)]
+        except Exception as ex:  # noqa: BLE001 — a driver result cap, not the engine
+            entry["collect_error"] = f"{label}: {type(ex).__name__}: {ex}"[:300]
+            continue
+        entry["collect_sec"][label] = round(min(s for s, _ in runs), 2)
+        entry["rows"][label] = runs[0][1]
+    entry["noop_ratio"] = ratio(entry["noop_sec"])
+    entry["collect_ratio"] = ratio(entry["collect_sec"])
+    entry["plan_unchanged"] = entry["plan"]["sf0.1"] == entry["plan"]["sf1"]
+    return entry
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default=None)
-    ap.add_argument(
-        "--queries",
-        nargs="*",
-        default=None,
-        help="probe only these query names (default: full PROBE_QUERIES set)",
-    )
-    ap.add_argument(
-        "--merge",
-        action="store_true",
-        help="merge this run's per-query entries into an existing --out file "
-        "instead of replacing it (for incremental subset probes)",
-    )
+    ap.add_argument("--out", required=True, help="JSON report; keys already in it are skipped")
+    ap.add_argument("names", nargs="*", help="keys to probe (default: every registered key)")
     args = ap.parse_args()
+
+    queries, _ = load_all()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"unknown query names: {' '.join(unknown)}")
+    report: dict = {"copies": COPIES, "queries": {}}
+    if os.path.exists(args.out):
+        with open(args.out) as f:
+            report = json.load(f)
+    todo = [n for n in (args.names or queries) if n not in report["queries"]]
+    print(f"{len(todo)} keys to probe, {len(report['queries'])} already in {args.out}", flush=True)
+    if not todo:
+        return 0
 
     # 8g result cap: legitimately pair-shaped outputs (user-user sims) top
     # 1 GiB serialized at sf1 and killed whole probe batches at the 1g
     # default — a harness limit, not a query defect (the probe materializes
     # full results on the driver; production sinks write distributed).
-    spark = get_spark(
-        app_name="sf1-probe",
-        extra_conf={"spark.driver.maxResultSize": "8g"},
-    )
+    spark = get_spark(app_name="sf1-probe", extra_conf={"spark.driver.maxResultSize": "8g"})
+    spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     generate(spark)
-    gen_s = round(time.time() - t0, 1)
+    report["gen_sec"] = round(time.time() - t0, 1)
 
-    queries, _ = load_all()
-    probe_set = tuple(args.queries) if args.queries else PROBE_QUERIES
-    report: dict = {"gen_sec": gen_s, "copies": COPIES, "queries": {}}
-    out = args.out or "SF1_PROBE.json"
-
-    def flush() -> None:
-        # write after EVERY query: a mid-batch crash (result-size cap, VM
-        # eviction) must not lose the completed entries — the 30-query r7
-        # batch died on query 10 and lost all 9 finished measurements
-        merged = report
-        if args.merge and os.path.exists(out):
-            with open(out) as f:
-                prior = json.load(f)
-            prior["queries"].update(report["queries"])
-            prior["gen_sec"] = report["gen_sec"]
-            merged = prior
-        with open(out, "w") as f:
-            json.dump(merged, f, indent=2)
-
-    def measure(fn, collect: bool) -> dict:
-        entry: dict = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            # time the query-construction call too: a key that checkpoints
-            # (the star-contraction rounds) does its work inside fn(), not
-            # in the final action — plan digest stays untimed
-            t = time.time()
-            df = fn(spark, sf_dir)
-            build_s = time.time() - t
-            entry.setdefault("plan", {})[label] = plan_digest(df)
-            t = time.time()
-            if collect:
-                n = df.toPandas().shape[0]
-            else:
-                # driver-free materialization: the full plan executes
-                # distributed, zero rows cross to the driver
-                df.write.format("noop").mode("overwrite").save()
-                n = None
-            entry.setdefault("sec", {})[label] = round(build_s + time.time() - t, 2)
-            entry.setdefault("rows", {})[label] = n
-        return entry
-
-    for name in probe_set:
-        fn = queries[name]
+    for name in todo:
         try:
-            entry = measure(fn, collect=True)
+            entry = probe(spark, queries[name])
         except Exception as ex:  # noqa: BLE001 — isolate per-query failures
-            # full-matrix outputs (the UserCF sim table tops 10 GiB
-            # serialized at sf1) exceed any sane collect cap — a harness
-            # limit, not a query defect. Retry with the noop sink and mark
-            # the entry so its timing basis is visible.
-            print(
-                f"{name}: collect failed ({type(ex).__name__}); retrying "
-                f"with noop sink",
-                flush=True,
-            )
-            try:
-                entry = measure(fn, collect=False)
-                entry["action"] = "noop"
-            except Exception as ex2:  # noqa: BLE001
-                print(f"{name}: FAILED {type(ex2).__name__}: {ex2}"[:300], flush=True)
-                report["queries"][name] = {"error": f"{type(ex2).__name__}: {ex2}"[:300]}
-                flush()
-                continue
-        entry["ratio"] = (
-            round(entry["sec"]["sf1"] / entry["sec"]["sf0.1"], 2)
-            if entry["sec"]["sf0.1"] > 0
-            else None
-        )
-        entry["plan_unchanged"] = entry["plan"]["sf0.1"] == entry["plan"]["sf1"]
+            entry = {"error": f"{type(ex).__name__}: {ex}"[:300]}
         report["queries"][name] = entry
-        print(
-            f"{name}: sf0.1={entry['sec']['sf0.1']}s sf1={entry['sec']['sf1']}s "
-            f"ratio={entry['ratio']}x plan_unchanged={entry['plan_unchanged']}",
-            flush=True,
-        )
-        if not entry["plan_unchanged"]:
-            d1, d2 = entry["plan"]["sf0.1"], entry["plan"]["sf1"]
-            print("  plan diff:", {k: (d1[k], d2[k]) for k in d1 if d1[k] != d2[k]}, flush=True)
-        flush()
-
-    print("written", out)
+        print(name, json.dumps({k: v for k, v in entry.items() if k != "plan"}), flush=True)
+        # written after EVERY key: a mid-batch crash (VM eviction, OOM) keeps
+        # the finished entries, and the rerun resumes after them
+        with open(args.out, "w") as f:
+            json.dump(report, f, indent=2)
     return 0
 
 
